@@ -226,8 +226,17 @@ def encode_mvt_rect_tiles(rects: DataFrame) -> DataFrame:
 # tests/test_mvt.py.
 
 
+# the digit counting below covers varints of at most 5 bytes
+_VARINT_NP_LIMIT = 1 << 35
+
+
 def _varint_lens_np(vals: np.ndarray) -> np.ndarray:
     v = vals.astype(np.int64)
+    if v.size and (v.min() < 0 or v.max() >= _VARINT_NP_LIMIT):
+        raise ValueError(
+            "vectorized MVT writer encodes ids and zigzag coordinates in"
+            f" [0, 2**35); got values in [{v.min()}, {v.max()}]"
+        )
     return (
         1
         + (v >= 128).astype(np.int64)
@@ -367,7 +376,8 @@ def mvt_attr_point_tile(
         geom = _varint(9) + _varint(_zigzag(px)) + _varint(_zigzag(py))
         body = (
             b"\x08" + _varint(fid)
-            + b"\x12\x02\x00" + _varint(vidx[a])     # tags [0, vi]
+            + b"\x12" + _varint(1 + len(_varint(vidx[a])))  # tags
+            + b"\x00" + _varint(vidx[a])                    # [0, vi]
             + b"\x18\x01"
             + b"\x22" + _varint(len(geom)) + geom
         )

@@ -9,14 +9,13 @@ reference's 4-child reduce — parent tile = (tx >> 1, ty >> 1), exactly
 create_overview_tile's parent derivation (gdal2tiles.py:1484-1486).
 ``ceil(px/256)-1`` is dyadic, so floor-halving the child index equals
 recomputing the tile at the coarser zoom (proof: if t=ceil(p/256)-1 then
-ceil(p/512)-1 == t>>1 for t>=0) — the reduce is bit-identical to direct
-assignment while shuffling geometrically-shrinking aggregates instead of
-(zmax+1) x the corpus.
+ceil(p/512)-1 == t>>1 for t>=0), and k halvings are one k-bit shift —
+so every level comes out of the base tile counts in one aggregate,
+bit-identical to direct assignment while shuffling tile counts instead
+of (zmax+1) x the corpus.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,31 +36,39 @@ def tile_counts(docs: DataFrame, zoom: int, lon_col="lon", lat_col="lat") -> Dat
     )
 
 
-def tile_pyramid(docs: DataFrame, zmax: int, lon_col="lon", lat_col="lat") -> DataFrame:
-    """(zoom, tx, ty, n_docs) for zoom in [0, zmax] via 4-child reduce.
-
-    The zmax base level is EAGERLY localCheckpoint-ed: every overview
-    level and the final union hang off it, and without the pin the
-    union's plan re-derives the corpus-sized base aggregation per level
-    (exchange reuse dedupes only what the optimizer happens to match —
-    measured 3.2 s vs 1.6 s at bench scale, i.e. the courtesy was only
-    partial).  The checkpoint is one corpus-sized job producing
-    <= 4^zmax tile rows; the shrinking reduce chains above it stay lazy
-    (re-deriving them is arithmetic over tile counts, not corpus
-    scans)."""
-    base = tile_counts(docs, zmax, lon_col, lat_col).localCheckpoint(eager=True)
-    levels = [base]
-    for z in range(zmax, 0, -1):
-        child = levels[-1]
-        parent = (
-            child.select(
-                F.shiftright("tx", 1).alias("tx"),
-                F.shiftright("ty", 1).alias("ty"),
-                "n_docs",
-            )
-            .groupBy("tx", "ty")
-            .agg(F.sum("n_docs").alias("n_docs"))
-            .select(F.lit(z - 1).alias("zoom"), "tx", "ty", "n_docs")
+def _pyramid_plan(docs: DataFrame, zmax: int, lon_col="lon", lat_col="lat") -> DataFrame:
+    """The lazy pyramid: the zmax base aggregate, each base tile
+    exploded to its zmax + 1 ancestors (itself included), and ONE
+    (zoom, tx, ty) aggregate over them — two shuffles in all."""
+    base = tile_counts(docs, zmax, lon_col, lat_col)
+    return (
+        base.select(
+            F.explode(F.sequence(F.lit(0), F.lit(zmax))).alias("zoom"),
+            "tx",
+            "ty",
+            "n_docs",
         )
-        levels.append(parent)
-    return reduce(DataFrame.unionByName, levels)
+        .select(
+            "zoom",
+            F.expr(f"shiftright(tx, {zmax} - zoom)").alias("tx"),
+            F.expr(f"shiftright(ty, {zmax} - zoom)").alias("ty"),
+            "n_docs",
+        )
+        .groupBy("zoom", "tx", "ty")
+        .agg(F.sum("n_docs").alias("n_docs"))
+    )
+
+
+def tile_pyramid(docs: DataFrame, zmax: int, lon_col="lon", lat_col="lat") -> DataFrame:
+    """(zoom, tx, ty, n_docs) for zoom in [0, zmax].
+
+    One corpus-sized aggregate counts docs per zmax base tile; each base
+    tile then contributes its count to all its ancestors at once (the
+    ancestor at zoom z is (tx >> (zmax - z), ty >> (zmax - z)): k
+    floor-halvings are one k-bit shift), and a single (zoom, tx, ty)
+    aggregate sums them.  The whole pyramid — at most (zmax + 1) x the
+    base tile count, tiny next to the corpus — is EAGERLY
+    localCheckpoint-ed, so consumers that read it once per level (e.g.
+    one table commit per zoom) scan the checkpoint instead of re-running
+    the shuffles."""
+    return _pyramid_plan(docs, zmax, lon_col, lat_col).localCheckpoint(eager=True)

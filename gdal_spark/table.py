@@ -44,10 +44,17 @@ sink commit and the checkpoint commit is deduplicated by
 
 Scale notes (100 TB): manifests carry file-level row counts AND
 per-file min/max column stats (``stats_cols``) so readers plan from
-metadata without listing the directory; ``pruned_read`` opens only the
-files whose recorded range can match a predicate (Iceberg scan
-planning — a selective query touches metadata plus the matching files,
-never the table); ``read`` hands Spark the manifest's file list
+metadata without listing the directory.  A commit takes both from the
+parquet footers it just wrote (Iceberg's writers do the same), so it
+costs one write job; one extra Spark job computes them only for files
+whose footer cannot reproduce Spark's min/max exactly (dates,
+decimals, timestamps, nested columns, oversized strings, a float bound
+of zero).  Each file entry records the id of the schema it was written
+with: when every file matches the manifest's schema, reads pass that
+schema to Spark instead of merging footers.  ``pruned_read`` opens
+only the files whose recorded range can match a predicate (Iceberg
+scan planning — a selective query touches metadata plus the matching
+files, never the table); ``read`` hands Spark the manifest's file list
 directly, so row-group pruning and column projection work exactly as
 on a plain parquet scan; ``incremental`` reads ONLY the files added
 after the from-snapshot — the delta-job shape (registry
@@ -57,13 +64,17 @@ the history.
 
 from __future__ import annotations
 
+import hashlib
 import json
+import math
 import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class CommitConflict(RuntimeError):
@@ -103,8 +114,6 @@ def _pt_value(value, transform: str):
     """The same transform computed driver-side on a predicate value, so
     scan planning needs no Spark job.  int/string source values only
     (their str() matches Spark's CAST AS STRING rendering)."""
-    import hashlib
-
     if transform == "identity":
         return value
     if transform.startswith("bucket["):
@@ -115,6 +124,132 @@ def _pt_value(value, transform: str):
         w = int(transform[9:-1])
         return value - (value % w)
     raise ValueError(f"unknown partition transform: {transform}")
+
+
+def _schema_id(schema_json: dict | None) -> str | None:
+    """Short content hash of a Spark schema's JSON form."""
+    if schema_json is None:
+        return None
+    text = json.dumps(schema_json, sort_keys=True)
+    return hashlib.sha1(text.encode()).hexdigest()[:16]
+
+
+def _job_stats(
+    spark: SparkSession, paths: list[str], cols: list[str]
+) -> dict[str, tuple[int, dict]]:
+    """Per-file (rows, {col: [min, max]}) for ``paths`` from ONE Spark
+    job (input_file_name groupBy), not a job per file.  Every path gets
+    an entry; empty files have no group and come out as (0, {})."""
+    scan = spark.read.parquet(*paths)
+    scols = [c for c in cols if c in scan.columns]
+    aggs = [F.count(F.lit(1)).alias("_n")]
+    for c in scols:
+        aggs.append(F.min(c).alias(f"_min_{c}"))
+        aggs.append(F.max(c).alias(f"_max_{c}"))
+    rows = scan.groupBy(F.input_file_name().alias("f")).agg(*aggs).collect()
+    by_name = {
+        os.path.basename(r["f"].removeprefix("file://")): (
+            r["_n"],
+            {c: [r[f"_min_{c}"], r[f"_max_{c}"]] for c in scols},
+        )
+        for r in rows
+    }
+    return {p: by_name.get(os.path.basename(p), (0, {})) for p in paths}
+
+
+# Spark types whose parquet footer min/max are the values Spark's
+# min/max return: signed integers, IEEE floats, booleans and strings in
+# the default (binary) collation.  Dates, decimals, timestamps, binary
+# and nested columns (whose type is a JSON object, never in the tuple)
+# are left to the Spark job.
+_FOOTER_EXACT = (
+    "byte", "short", "integer", "long", "float", "double", "boolean",
+    "string",
+)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _nan_last(v) -> tuple:
+    """Sort key in Spark's order, where NaN sorts above every number."""
+    return (isinstance(v, float) and math.isnan(v), v)
+
+
+def _footer_stats(path: str, cols: list[str]) -> tuple[int, dict] | None:
+    """(rows, {col: [min, max]}) of one Spark-written parquet file from
+    its footer, equal to what :func:`_job_stats` computes, or None when
+    the footer cannot reproduce Spark's answer exactly.
+
+    The Spark schema the writer stored in the footer names the columns
+    and their types.  Row-group statistics merge in Spark's order
+    (parquet writes float min/max in the same total order, NaN above
+    every number).  Falls back on: a type outside ``_FOOTER_EXACT``; a
+    row group that has values but no min/max (e.g. strings past the
+    writer's statistics size limit); and a float bound of zero, whose
+    sign depends on row order in Spark (min(0.0, -0.0) keeps whichever
+    comes first) while parquet always records -0.0 / +0.0."""
+    md = pq.read_metadata(path)
+    if md.num_rows == 0:
+        return 0, {}
+    spark_schema = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_schema is None:
+        return None
+    fields = {f["name"]: f for f in json.loads(spark_schema)["fields"]}
+    leaves: dict[str, int | None] = {}
+    for i in range(md.num_columns):
+        name = md.schema.column(i).path
+        leaves[name] = None if name in leaves else i  # ambiguous: None
+    stats: dict[str, list] = {}
+    for c in cols:
+        field = fields.get(c)
+        if field is None:
+            continue  # the job skips absent columns too
+        i = leaves.get(c)
+        if (
+            i is None
+            or field["type"] not in _FOOTER_EXACT
+            or "__COLLATIONS" in field.get("metadata", {})
+        ):
+            return None
+        lo = hi = None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(i).statistics
+            if st is None:
+                return None
+            if not st.has_min_max:
+                if st.has_null_count and st.null_count == rg.num_rows:
+                    continue  # all-NULL row group
+                return None
+            if lo is None or _nan_last(st.min) < _nan_last(lo):
+                lo = st.min
+            if hi is None or _nan_last(st.max) > _nan_last(hi):
+                hi = st.max
+        if isinstance(lo, float) and (lo == 0.0 or hi == 0.0):
+            return None
+        stats[c] = [lo, hi]
+    return md.num_rows, stats
+
+
+def _file_stats(
+    spark: SparkSession, paths: list[str], cols: list[str]
+) -> dict[str, tuple[int, dict]]:
+    """Per-file (rows, {col: [min, max]}) for freshly written ``paths``:
+    from the parquet footers (Iceberg's writers take file metrics the
+    same way), with one :func:`_job_stats` job over the files whose
+    footer cannot reproduce Spark's answer."""
+    out: dict[str, tuple[int, dict]] = {}
+    rest = []
+    for p in paths:
+        got = _footer_stats(p, cols)
+        if got is None:
+            rest.append(p)
+        else:
+            out[p] = got
+    if rest:
+        out.update(_job_stats(spark, rest, cols))
+    return out
 
 
 class SnapshotTable:
@@ -403,28 +538,13 @@ class SnapshotTable:
                 df, staging, "snap", sid, nonce, partitioned=True
             )
 
-        # per-file lineage + metrics + column min/max stats in ONE job
-        # (input_file_name groupBy), not a job per file
-        counts: dict[str, int] = {}
-        stats: dict[str, dict[str, list]] = {}
-        if new_files:
-            scan = self.spark.read.parquet(*[p for p, _ in new_files])
-            scols = [c for c in self.stats_cols if c in scan.columns]
-            aggs = [F.count(F.lit(1)).alias("_n")]
-            for c in scols:
-                aggs.append(F.min(c).alias(f"_min_{c}"))
-                aggs.append(F.max(c).alias(f"_max_{c}"))
-            rows = (
-                scan.groupBy(F.input_file_name().alias("f"))
-                .agg(*aggs)
-                .collect()
-            )
-            for r in rows:
-                name = os.path.basename(r["f"].removeprefix("file://"))
-                counts[name] = r["_n"]
-                stats[name] = {
-                    c: [r[f"_min_{c}"], r[f"_max_{c}"]] for c in scols
-                }
+        # per-file lineage + metrics + column min/max stats, read from the
+        # footers just written (a Spark job only for files whose footer
+        # cannot reproduce Spark's min/max exactly)
+        fstats = _file_stats(
+            self.spark, [p for p, _ in new_files], self.stats_cols
+        )
+        schema_id = _schema_id(schema_json)
 
         pm = self._manifest(parent) if parent is not None else {}
         keeps_history = operation in ("append", "delete", "merge")
@@ -434,9 +554,12 @@ class SnapshotTable:
         new_entries = [
             {
                 "path": p,
-                "rows": counts.get(os.path.basename(p), 0),
+                "rows": fstats[p][0],
                 "added_sid": sid,
-                "stats": stats.get(os.path.basename(p), {}),
+                "stats": fstats[p][1],
+                # the schema the file was written with: reads skip the
+                # schema-merge job when every file matches the manifest
+                "schema_id": schema_id,
                 # hidden-partition tuple: spec-name -> directory value
                 # (strings as partitionBy wrote them), resolved against
                 # the spec recorded IN THIS MANIFEST — spec evolution
@@ -602,23 +725,31 @@ class SnapshotTable:
             raise ValueError(f"{self.root}: snapshot has no data files")
         return self._scan(m, m["files"])
 
-    def _read_parquet(self, paths: list[str]) -> DataFrame:
+    def _read_parquet(self, m: dict, files: list[dict]) -> DataFrame:
+        paths = [f["path"] for f in files]
+        sid = _schema_id(m.get("schema"))
+        if sid is not None and all(f.get("schema_id") == sid for f in files):
+            # every file was written with the manifest's schema: hand it
+            # to the reader, no footer has to be read to plan the scan
+            schema = StructType.fromJson(m["schema"])
+            return self.spark.read.schema(schema).parquet(*paths)
         # mergeSchema: schema evolution is merge-on-read — a file written
         # before a column was added simply lacks it, and the union schema
         # fills NULL (time travel to an older snapshot sees only older
-        # files, hence the older schema, with no extra bookkeeping)
+        # files, hence the older schema, with no extra bookkeeping).
+        # Also the path for manifests that predate per-file schema ids.
         return self.spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def _scan(self, m: dict, files: list[dict]) -> DataFrame:
         dels = m.get("delete_files", [])
         if not dels:
-            return self._read_parquet([f["path"] for f in files])
-        groups: dict[int, list[str]] = {}
+            return self._read_parquet(m, files)
+        groups: dict[int, list[dict]] = {}
         for f in files:
-            groups.setdefault(f.get("added_sid", 0), []).append(f["path"])
+            groups.setdefault(f.get("added_sid", 0), []).append(f)
         out = None
-        for added_sid, paths in sorted(groups.items()):
-            df = self._read_parquet(paths)
+        for added_sid, group in sorted(groups.items()):
+            df = self._read_parquet(m, group)
             for d in dels:
                 if d["sid"] > added_sid:  # strictly-later deletes only:
                     # a merge's own data files are never self-masked

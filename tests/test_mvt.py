@@ -309,3 +309,79 @@ class TestAttributes:
         assert keys == ["lang"]
         assert vals == ["de", "en"]  # sorted distinct
         assert tags == [(0, 0), (0, 1), (0, 1)]  # fid order 1(de),5(en),9(en)
+
+
+def test_attr_writer_parity_past_one_byte_value_index():
+    """128+ distinct attribute values make value indices two-byte
+    varints: the tags field length must grow with them in both
+    writers, and the tile must still decode."""
+    import numpy as np
+
+    from gdal_spark.operators.mvt import (
+        mvt_attr_point_tile,
+        mvt_attr_point_tile_np,
+    )
+
+    n = 300
+    fids = np.arange(n, dtype=np.int64)
+    xs = (fids * 7) % EXTENT
+    ys = (fids * 13) % EXTENT
+    attrs = [f"v{i:03d}" for i in range(n)]
+    blob = mvt_attr_point_tile(
+        list(zip(fids.tolist(), xs.tolist(), ys.tolist(), attrs))
+    )
+    assert blob == mvt_attr_point_tile_np(fids, xs, ys, np.array(attrs))
+    # every feature's tags decode to [0, its value index]
+    _, pos = _read_varint(blob, 0)
+    llen, pos = _read_varint(blob, pos)
+    layer = blob[pos:pos + llen]
+    p, tags = 0, []
+    while p < len(layer):
+        t, p = _read_varint(layer, p)
+        if t & 7 != 2:
+            _, p = _read_varint(layer, p)
+            continue
+        ln, p = _read_varint(layer, p)
+        if t >> 3 == 2:
+            feat, q = layer[p:p + ln], 0
+            while q < len(feat):
+                t2, q = _read_varint(feat, q)
+                if t2 & 7 != 2:
+                    _, q = _read_varint(feat, q)
+                    continue
+                gl, q = _read_varint(feat, q)
+                if t2 >> 3 == 2:
+                    ki, q2 = _read_varint(feat, q)
+                    vi, q2 = _read_varint(feat, q2)
+                    assert q2 == q + gl
+                    tags.append((ki, vi))
+                q += gl
+        p += ln
+    assert tags == [(0, i) for i in range(n)]
+
+
+@pytest.mark.parametrize(
+    "fid, px",
+    [(1 << 35, 0), ((1 << 35) - 1, 1 << 34), (-1, 0)],
+)
+def test_numpy_writer_rejects_values_past_five_byte_varints(fid, px):
+    """Ids and zigzag coordinates must stay below 2**35, the largest
+    value the vectorized writer's five-byte varint digit count covers
+    (a coordinate of 2**34 zigzags to 2**35)."""
+    import numpy as np
+
+    from gdal_spark.operators.mvt import mvt_point_tile_np
+
+    with pytest.raises(ValueError, match="2\\*\\*35"):
+        mvt_point_tile_np(np.array([fid]), np.array([px]), np.array([0]))
+
+
+def test_numpy_writer_accepts_largest_five_byte_id():
+    import numpy as np
+
+    from gdal_spark.operators.mvt import mvt_point_tile, mvt_point_tile_np
+
+    fid = (1 << 35) - 1
+    assert mvt_point_tile_np(
+        np.array([fid]), np.array([5]), np.array([6])
+    ) == mvt_point_tile([(fid, 5, 6)])
