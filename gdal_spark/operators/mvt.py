@@ -77,24 +77,25 @@ def mvt_point_tile(features: list[tuple[int, int, int]]) -> bytes:
     return b"\x1a" + _varint(len(layer)) + layer  # Tile.layers framing
 
 
-def encode_mvt_tiles(points: DataFrame) -> DataFrame:
-    """(tx, ty, fid, px, py) -> one MVT tile per (tx, ty):
-    (tx, ty, mvt, n_bytes, byte_sum)."""
-    schema = StructType(
-        [
-            StructField("tx", LongType()),
-            StructField("ty", LongType()),
-            StructField("mvt", BinaryType()),
-            StructField("n_bytes", IntegerType()),
-            StructField("byte_sum", LongType()),
-        ]
-    )
+_TILE_SCHEMA = StructType(
+    [
+        StructField("tx", LongType()),
+        StructField("ty", LongType()),
+        StructField("mvt", BinaryType()),
+        StructField("n_bytes", IntegerType()),
+        StructField("byte_sum", LongType()),
+    ]
+)
+
+
+def _encode_tiles(df: DataFrame, writer, cols: tuple[str, ...]) -> DataFrame:
+    """One ``writer(*cols)`` call per (tx, ty) group -> (tx, ty, mvt,
+    n_bytes, byte_sum).  Columns are read as int64, except ``attr``
+    (strings)."""
 
     def enc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = mvt_point_tile_np(
-            pdf["fid"].to_numpy(np.int64),
-            pdf["px"].to_numpy(np.int64),
-            pdf["py"].to_numpy(np.int64),
+        blob = writer(
+            *(pdf[c].to_numpy(object if c == "attr" else np.int64) for c in cols)
         )
         arr = np.frombuffer(blob, dtype=np.uint8)
         return pd.DataFrame(
@@ -107,7 +108,13 @@ def encode_mvt_tiles(points: DataFrame) -> DataFrame:
             }
         )
 
-    return points.groupBy("tx", "ty").applyInPandas(enc, schema)
+    return df.groupBy("tx", "ty").applyInPandas(enc, _TILE_SCHEMA)
+
+
+def encode_mvt_tiles(points: DataFrame) -> DataFrame:
+    """(tx, ty, fid, px, py) -> one MVT tile per (tx, ty):
+    (tx, ty, mvt, n_bytes, byte_sum)."""
+    return _encode_tiles(points, mvt_point_tile_np, ("fid", "px", "py"))
 
 
 # ------------------------------------------------------------ SQL oracle
@@ -184,36 +191,9 @@ def mvt_rect_tile(features: list[tuple[int, int, int, int, int]]) -> bytes:
 def encode_mvt_rect_tiles(rects: DataFrame) -> DataFrame:
     """(tx, ty, fid, x0, y0, x1, y1) -> one MVT polygon tile per
     (tx, ty): (tx, ty, mvt, n_bytes, byte_sum)."""
-    schema = StructType(
-        [
-            StructField("tx", LongType()),
-            StructField("ty", LongType()),
-            StructField("mvt", BinaryType()),
-            StructField("n_bytes", IntegerType()),
-            StructField("byte_sum", LongType()),
-        ]
+    return _encode_tiles(
+        rects, mvt_rect_tile_np, ("fid", "x0", "y0", "x1", "y1")
     )
-
-    def enc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = mvt_rect_tile_np(
-            pdf["fid"].to_numpy(np.int64),
-            pdf["x0"].to_numpy(np.int64),
-            pdf["y0"].to_numpy(np.int64),
-            pdf["x1"].to_numpy(np.int64),
-            pdf["y1"].to_numpy(np.int64),
-        )
-        arr = np.frombuffer(blob, dtype=np.uint8)
-        return pd.DataFrame(
-            {
-                "tx": [key[0]],
-                "ty": [key[1]],
-                "mvt": [blob],
-                "n_bytes": [len(blob)],
-                "byte_sum": [int(arr.astype(np.int64).sum())],
-            }
-        )
-
-    return rects.groupBy("tx", "ty").applyInPandas(enc, schema)
 
 
 # ---------------------------------------------------------- numpy writer
@@ -228,6 +208,11 @@ def encode_mvt_rect_tiles(rects: DataFrame) -> DataFrame:
 
 # the digit counting below covers varints of at most 5 bytes
 _VARINT_NP_LIMIT = 1 << 35
+
+
+def _zigzag_np(v: np.ndarray) -> np.ndarray:
+    """:func:`_zigzag` on an int64 array (any sign)."""
+    return (v << 1) ^ (v >> 63)
 
 
 def _varint_lens_np(vals: np.ndarray) -> np.ndarray:
@@ -304,9 +289,8 @@ def mvt_rect_tile_np(fids: np.ndarray, x0: np.ndarray, y0: np.ndarray,
     ay0 = y0[order].astype(np.int64)
     dx = x1[order].astype(np.int64) - ax0
     dy = y1[order].astype(np.int64) - ay0
-    zx0, zy0 = ax0 << 1, ay0 << 1
-    zdx, zdy = dx << 1, dy << 1
-    zndx = (dx << 1) - 1  # zigzag(-dx) for dx > 0
+    zx0, zy0 = _zigzag_np(ax0), _zigzag_np(ay0)
+    zdx, zdy, zndx = _zigzag_np(dx), _zigzag_np(dy), _zigzag_np(-dx)
     lid = _varint_lens_np(fid)
     lx0 = _varint_lens_np(zx0)
     ly0 = _varint_lens_np(zy0)
@@ -446,32 +430,6 @@ def mvt_attr_point_tile_np(
 
 def encode_mvt_attr_tiles(points: DataFrame) -> DataFrame:
     """(tx, ty, fid, px, py, attr) -> tagged MVT tiles."""
-    schema = StructType(
-        [
-            StructField("tx", LongType()),
-            StructField("ty", LongType()),
-            StructField("mvt", BinaryType()),
-            StructField("n_bytes", IntegerType()),
-            StructField("byte_sum", LongType()),
-        ]
+    return _encode_tiles(
+        points, mvt_attr_point_tile_np, ("fid", "px", "py", "attr")
     )
-
-    def enc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = mvt_attr_point_tile_np(
-            pdf["fid"].to_numpy(np.int64),
-            pdf["px"].to_numpy(np.int64),
-            pdf["py"].to_numpy(np.int64),
-            pdf["attr"].to_numpy(object),
-        )
-        arr = np.frombuffer(blob, dtype=np.uint8)
-        return pd.DataFrame(
-            {
-                "tx": [key[0]],
-                "ty": [key[1]],
-                "mvt": [blob],
-                "n_bytes": [len(blob)],
-                "byte_sum": [int(arr.astype(np.int64).sum())],
-            }
-        )
-
-    return points.groupBy("tx", "ty").applyInPandas(enc, schema)

@@ -1058,9 +1058,7 @@ def cutline_blend(
     The distance kernel is the lineref point-to-segment projection,
     vectorized pixels x boundary-segments; min over segments is
     order-exact, so the float matches the oracle's LEAST chain."""
-    from gdal_spark.geometry.envelope import wkt_envelope
-    from gdal_spark.geometry.wkt import parse_wkt
-    from gdal_spark.operators.pip_join import _polys_cached
+    from gdal_spark.geometry.envelope import wkt_envelope, zone_geometry
 
     def add_env(it):
         for pdf in it:
@@ -1106,7 +1104,7 @@ def cutline_blend(
         uniq, inv = np.unique(wkt_s.to_numpy(dtype=object), return_inverse=True)
         for i, w in enumerate(uniq):
             mask = inv == i
-            polys = _polys_cached(w)
+            polys = zone_geometry(w, "wkt").polys
             x, y = xs[mask], ys[mask]
             inside = np.zeros(x.size, dtype=bool)
             segs = []

@@ -34,8 +34,9 @@ from pyspark.sql.types import (
 )
 
 from gdal_spark.geometry import mercator
+from gdal_spark.geometry.envelope import is_rectangle, zone_geometry
 from gdal_spark.geometry.pip import points_in_polygon
-from gdal_spark.operators.pip_join import _polys_cached, zone_cell_index
+from gdal_spark.operators.pip_join import zone_cell_index
 
 TILE = 256
 
@@ -135,16 +136,11 @@ def rasterize(
         any_mask = np.zeros((TILE, TILE), dtype=bool)
         wkt_of = dict(zip(pdf[zone_id_col], pdf[wkt_col]))
         for zid in np.sort(pdf[zone_id_col].unique()):
-            polys = _polys_cached(wkt_of[zid])
+            polys = zone_geometry(wkt_of[zid], "wkt").polys
             mask = np.zeros((TILE, TILE), dtype=bool)  # TMS rows (south-up)
             for rings in polys:
                 ring0 = rings[0]
-                is_rect = (
-                    len(rings) == 1
-                    and ring0.shape[0] == 5
-                    and len(np.unique(ring0[:, 0])) == 2
-                    and len(np.unique(ring0[:, 1])) == 2
-                )
+                is_rect = is_rectangle("POLYGON", rings)
                 if is_rect and all_touched:
                     x0, x1 = ring0[:, 0].min(), ring0[:, 0].max()
                     y0, y1 = ring0[:, 1].min(), ring0[:, 1].max()
@@ -253,16 +249,11 @@ def rasterize_values(
         img = np.zeros((TILE, TILE), dtype=np.int64)  # TMS rows (south-up)
         wkt_of = dict(zip(pdf[zone_id_col], pdf[wkt_col]))
         for zid in np.sort(pdf[zone_id_col].unique()):
-            polys = _polys_cached(wkt_of[zid])
+            polys = zone_geometry(wkt_of[zid], "wkt").polys
             mask = np.zeros((TILE, TILE), dtype=bool)
             for rings in polys:
                 ring0 = rings[0]
-                is_rect = (
-                    len(rings) == 1
-                    and ring0.shape[0] == 5
-                    and len(np.unique(ring0[:, 0])) == 2
-                    and len(np.unique(ring0[:, 1])) == 2
-                )
+                is_rect = is_rectangle("POLYGON", rings)
                 if is_rect:
                     x0, x1 = ring0[:, 0].min(), ring0[:, 0].max()
                     y0, y1 = ring0[:, 1].min(), ring0[:, 1].max()

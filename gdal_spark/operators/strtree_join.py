@@ -19,10 +19,15 @@ When to prefer which at 100 TB:
 
 Zone-layer contract: dim-sized (driver-materialized + rebroadcast, the
 same documented contract as the kNN target table; the carried-WKT cell
-join remains the beyond-driver-memory path).  Exactness: candidates are
-envelope hits; every candidate goes through the SAME per-unique-zone
-vectorized ray-cast as pip_join's refine, so results are bit-identical
-to the cell-join twin (pinned in tests/test_strtree_join.py).
+join remains the beyond-driver-memory path).  All three joins ship
+their dim layer through one helper (:func:`_broadcast_dim`: bounded
+row guard, driver collect, keyed broadcast) and build one tree per
+executor process through another (:func:`_tree_of`).  Exactness:
+candidates are envelope hits; every candidate goes through the SAME
+per-unique-zone kernels as the cell joins — zones decoded by the shared
+``zone_geometry`` cache, the ray-cast of pip_join's refine, the clip
+areas of overlay's kernel — so results are bit-identical to the
+cell-join twins (pinned in tests/test_strtree_join.py).
 """
 
 from __future__ import annotations
@@ -32,12 +37,12 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from gdal_spark.geometry.envelope import wkt_envelope
+from gdal_spark.geometry.envelope import zone_geometry
 from gdal_spark.geometry.pip import points_in_polygon
 from gdal_spark.geometry.strtree import STRTree
-from gdal_spark.geometry.wkt import parse_wkt
 
 # one tree per broadcast payload per executor process, keyed by an
 # explicit token SHIPPED IN the broadcast value — id(bc) would be the
@@ -55,7 +60,10 @@ _KEY_SEQ = [0]
 MAX_DIM_ROWS = 1_000_000
 
 
-def _dim_guard(df: DataFrame, what: str, twin: str, limit: int) -> None:
+def _broadcast_dim(df: DataFrame, what: str, twin: str, limit: int):
+    """Broadcast a dim layer as ``(key, *columns)`` (numpy arrays in
+    ``df``'s column order) after the bounded row guard; ``key`` is a
+    driver-unique token: applicationId x per-process sequence number."""
     n = df.limit(limit + 1).count()
     if n > limit:
         raise ValueError(
@@ -63,21 +71,28 @@ def _dim_guard(df: DataFrame, what: str, twin: str, limit: int) -> None:
             f"longer fits the driver-materialized dim-layer contract. "
             f"Use the {twin} twin, which never collects the method layer."
         )
+    pdf = df.toPandas()
+    sc = df.sparkSession.sparkContext
+    _KEY_SEQ[0] += 1
+    key = f"{sc.applicationId}/{_KEY_SEQ[0]}"
+    return sc.broadcast((key, *(pdf[c].to_numpy() for c in pdf.columns)))
 
 
-def _tree_of(bc) -> tuple:
-    key, ids, wkts = bc.value
+def _tree_of(bc, boxes_of) -> tuple:
+    """(STRTree, ids, *columns) of a :func:`_broadcast_dim` layer whose
+    first column is the id; the tree is bulk-loaded from
+    ``boxes_of(*columns)`` once per executor process."""
+    key, ids, *cols = bc.value
     got = _TREE_CACHE.get(key)
     if got is None:
-        boxes = np.asarray([wkt_envelope(w) for w in wkts], dtype=np.float64)
-        polys = []
-        for w in wkts:
-            typ, payload = parse_wkt(w)
-            polys.append(payload if typ == "MULTIPOLYGON" else [payload])
         _TREE_CACHE.clear()  # one live method layer per process is plenty
-        got = (STRTree(boxes), np.asarray(ids, dtype=np.int64), polys)
+        got = (STRTree(boxes_of(*cols)), np.asarray(ids, dtype=np.int64), *cols)
         _TREE_CACHE[key] = got
     return got
+
+
+def _zone_boxes(wkts) -> np.ndarray:
+    return np.asarray([zone_geometry(w, "wkt").env for w in wkts], dtype=np.float64)
 
 
 def pip_join_strtree(
@@ -93,15 +108,11 @@ def pip_join_strtree(
     """(doc_id, zone_id) pairs where the point lies inside the zone
     polygon (pip_join's exact containment semantics — same ray-cast
     kernel, same half-open rule)."""
-    sc = points.sparkSession.sparkContext
-    zsel = zones.select(zone_id_col, wkt_col)
-    _dim_guard(zsel, "zone layer", "pip_join (cell join)", max_dim_rows)
-    zpdf = zsel.toPandas()
-    _KEY_SEQ[0] += 1
-    # driver-unique token: applicationId x per-process sequence number
-    key = f"{sc.applicationId}/{_KEY_SEQ[0]}"
-    bc = sc.broadcast(
-        (key, zpdf[zone_id_col].to_numpy().tolist(), zpdf[wkt_col].tolist())
+    bc = _broadcast_dim(
+        zones.select(zone_id_col, wkt_col),
+        "zone layer",
+        "pip_join (cell join)",
+        max_dim_rows,
     )
 
     out_schema = StructType(
@@ -109,7 +120,7 @@ def pip_join_strtree(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tree, ids, polys = _tree_of(bc)
+        tree, ids, wkts = _tree_of(bc, _zone_boxes)
         for pdf in batches:
             xs = pdf[lon_col].to_numpy(dtype=np.float64)
             ys = pdf[lat_col].to_numpy(dtype=np.float64)
@@ -119,7 +130,7 @@ def pip_join_strtree(
             for z in np.unique(zi):
                 m = zi == z
                 hit = np.zeros(int(m.sum()), dtype=bool)
-                for rings in polys[z]:
+                for rings in zone_geometry(wkts[z], "wkt").polys:
                     hit |= points_in_polygon(xs[qi[m]], ys[qi[m]], rings)
                 keep[m] = hit
             qi, zi = qi[keep], zi[keep]
@@ -133,20 +144,6 @@ def pip_join_strtree(
     return points.select(id_col, lon_col, lat_col).mapInPandas(
         kernel, out_schema
     )
-
-
-def _clip_tree_of(bc) -> tuple:
-    """Envelope-only tree for the clip candidate stage (no ring parse —
-    zone classification goes through overlay._classify_zone's own
-    executor cache at refine time)."""
-    key, ids, wkts = bc.value
-    got = _TREE_CACHE.get(key)
-    if got is None:
-        boxes = np.asarray([wkt_envelope(w) for w in wkts], dtype=np.float64)
-        _TREE_CACHE.clear()  # one live method layer per process is plenty
-        got = (STRTree(boxes), np.asarray(ids, dtype=np.int64), list(wkts))
-        _TREE_CACHE[key] = got
-    return got
 
 
 def clip_join_strtree(
@@ -172,16 +169,11 @@ def clip_join_strtree(
     output is BIT-IDENTICAL to intersection_join(emit_wkt=False)
     (pinned in tests/test_strtree_join.py; same DuckDB oracle as
     clip_general in the registry)."""
-    sc = polydocs.sparkSession.sparkContext
-    zsel = zones.select(zone_id_col, wkt_col)
-    _dim_guard(
-        zsel, "zone layer", "intersection_join (cell join)", max_dim_rows
-    )
-    zpdf = zsel.toPandas()
-    _KEY_SEQ[0] += 1
-    key = f"{sc.applicationId}/{_KEY_SEQ[0]}/clip"
-    bc = sc.broadcast(
-        (key, zpdf[zone_id_col].to_numpy().tolist(), zpdf[wkt_col].tolist())
+    bc = _broadcast_dim(
+        zones.select(zone_id_col, wkt_col),
+        "zone layer",
+        "intersection_join (cell join)",
+        max_dim_rows,
     )
 
     out_schema = StructType(
@@ -193,10 +185,9 @@ def clip_join_strtree(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from gdal_spark.geometry.boolean import rects_polys_intersection_area
-        from gdal_spark.operators.overlay import AREA_EPS, _classify_zone
+        from gdal_spark.operators.overlay import AREA_EPS, zone_clip_areas
 
-        tree, ids, wkts = _clip_tree_of(bc)
+        tree, ids, wkts = _tree_of(bc, _zone_boxes)
         for pdf in batches:
             x0 = pdf["xmin"].to_numpy(np.float64)
             y0 = pdf["ymin"].to_numpy(np.float64)
@@ -206,21 +197,10 @@ def clip_join_strtree(
             areas = np.zeros(len(qi), dtype=np.float64)
             for z in np.unique(zi):
                 m = zi == z
-                info = _classify_zone(wkts[z])
-                if info[0] == "rect":
-                    zx0, zy0, zx1, zy1 = info[1]
-                    ix0 = np.maximum(x0[qi[m]], zx0)
-                    iy0 = np.maximum(y0[qi[m]], zy0)
-                    ix1 = np.minimum(x1[qi[m]], zx1)
-                    iy1 = np.minimum(y1[qi[m]], zy1)
-                    nonempty = (ix0 < ix1) & (iy0 < iy1)
-                    areas[m] = np.where(
-                        nonempty, (ix1 - ix0) * (iy1 - iy0), 0.0
-                    )
-                else:
-                    tris, w = info[1]
-                    rects = np.c_[x0[qi[m]], y0[qi[m]], x1[qi[m]], y1[qi[m]]]
-                    areas[m] = rects_polys_intersection_area(rects, tris, w)
+                q = qi[m]
+                areas[m] = zone_clip_areas(
+                    zone_geometry(wkts[z], "wkt"), x0[q], y0[q], x1[q], y1[q]
+                )
             keep = areas > AREA_EPS
             yield pd.DataFrame(
                 {
@@ -233,19 +213,6 @@ def clip_join_strtree(
     return polydocs.select(id_col, "xmin", "ymin", "xmax", "ymax").mapInPandas(
         kernel, out_schema
     )
-
-
-def _knn_tree_of(bc) -> tuple:
-    key, ids, tlon, tlat = bc.value
-    got = _TREE_CACHE.get(key)
-    if got is None:
-        tlon_a = np.asarray(tlon, dtype=np.float64)
-        tlat_a = np.asarray(tlat, dtype=np.float64)
-        boxes = np.column_stack([tlon_a, tlat_a, tlon_a, tlat_a])
-        _TREE_CACHE.clear()
-        got = (STRTree(boxes), np.asarray(ids, dtype=np.int64), tlon_a, tlat_a)
-        _TREE_CACHE[key] = got
-    return got
 
 
 # a box radius covering the whole lon/lat extent: the candidate set is
@@ -274,24 +241,16 @@ def knn_join_strtree(
     so the top-k is provably final (the tree analog of the cell-ring
     stop rule in knn.py:107-118).  Bit-identical to knn_join (pinned in
     tests/test_strtree_join.py; same DuckDB brute-force oracle)."""
-    sc = docs.sparkSession.sparkContext
-    tsel = targets.select("target_id", "tlon", "tlat")
-    _dim_guard(
-        tsel, "target layer", "knn_join (cell-ring join)", max_dim_rows
-    )
-    tpd = tsel.toPandas()
-    _KEY_SEQ[0] += 1
-    key = f"{sc.applicationId}/{_KEY_SEQ[0]}/knn"
-    bc = sc.broadcast(
-        (
-            key,
-            tpd["target_id"].to_numpy().tolist(),
-            tpd["tlon"].to_numpy().tolist(),
-            tpd["tlat"].to_numpy().tolist(),
-        )
+    bc = _broadcast_dim(
+        targets.select(
+            "target_id", *(F.col(c).cast("double").alias(c) for c in ("tlon", "tlat"))
+        ),
+        "target layer",
+        "knn_join (cell-ring join)",
+        max_dim_rows,
     )
 
-    from pyspark.sql.types import DoubleType, IntegerType
+    from pyspark.sql.types import IntegerType
 
     out_schema = StructType(
         [
@@ -303,7 +262,9 @@ def knn_join_strtree(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tree, tid, tlon, tlat = _knn_tree_of(bc)
+        tree, tid, tlon, tlat = _tree_of(
+            bc, lambda x, y: np.column_stack([x, y, x, y])
+        )
         kk = min(k, len(tid))
         if kk == 0:
             return

@@ -15,6 +15,13 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 65_536  # reference Arrow batch size (ogrlayerarrow.cpp:1947)
 
 
+def _driver_memory() -> str:
+    """Half the host's physical memory, capped at 24g: in local mode the
+    driver JVM shares the host with every Python worker."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2, 24 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "gdal-spark",
     cpus: int | None = None,
@@ -50,7 +57,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "1073741824")

@@ -933,7 +933,7 @@ class SnapshotTable:
         to = self._resolve(to_id)
         if from_id > to:
             raise ValueError(f"from {from_id} > to {to}")
-        files: list[str] = []
+        entries: list[dict] = []
         sid = to
         while sid > from_id:
             m = self._manifest(sid)
@@ -941,15 +941,17 @@ class SnapshotTable:
                 raise IncrementalAcrossOverwrite(
                     f"{self.root}: snapshot {sid} is {m['operation']!r}"
                 )
-            files.extend(self._files(m, "added_files"))
+            entries.extend(m["added_files"])
             sid = m["parent_id"]
             if sid is None:
                 break
         if sid is not None and sid > from_id:
             raise ValueError(f"{self.root}: no chain back to {from_id}")
-        if not files:
+        if not entries:
             return self.read(to).limit(0)
-        return self.spark.read.parquet(*files)
+        # read()'s path: the manifest schema when every file was written
+        # with it, mergeSchema otherwise (a column added mid-range)
+        return self._read_parquet(self._manifest(to), entries)
 
     def snapshots(self) -> DataFrame:
         """Metadata table (Iceberg ``table.snapshots``): one row per

@@ -255,6 +255,27 @@ def test_numpy_rect_writer_parity():
         assert a == b, n
 
 
+@pytest.mark.parametrize(
+    "rect",
+    [
+        (1, 5, 5, 5, 9),  # x1 == x0: zero-width
+        (1, 9, 5, 5, 9),  # x1 < x0
+        (1, 5, 9, 9, 5),  # y1 < y0
+        (1, 7, 3, 7, 3),  # zero-size
+    ],
+)
+def test_numpy_rect_writer_parity_on_non_positive_deltas(rect):
+    """Every delta is zigzag-encoded, so the vectorized writer matches
+    the scalar one for any corner order (not only x1 > x0, y1 > y0)."""
+    import numpy as np
+
+    from gdal_spark.operators.mvt import mvt_rect_tile, mvt_rect_tile_np
+
+    want = mvt_rect_tile([rect])
+    got = mvt_rect_tile_np(*(np.array([v], dtype=np.int64) for v in rect))
+    assert got == want
+
+
 class TestAttributes:
     def test_attr_round_trip_and_parity(self):
         import numpy as np

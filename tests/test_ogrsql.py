@@ -296,6 +296,30 @@ class TestJoin:
             (5, None),
         ]
 
+    def test_first_match_keeps_every_primary_row(self, spark, dim_layer):
+        """Primary rows sharing a key value, or with a NULL key, each
+        come out once: the first-match window is per primary row, not
+        per key value."""
+        prim = OgrLayer(
+            spark.createDataFrame(
+                [(1, 1), (2, 1), (3, None), (4, 2), (5, None)],
+                "pfid bigint, k bigint",
+            ),
+            fid="pfid",
+        )
+        out = execute_sql(
+            spark,
+            "SELECT p.pfid, d.label FROM p JOIN dim d ON p.k = d.ref",
+            {"p": prim, "dim": dim_layer},
+        )
+        assert sorted(out.collect(), key=lambda r: r[0]) == [
+            (1, "first-one"),
+            (2, "first-one"),
+            (3, None),
+            (4, "only-two"),
+            (5, None),
+        ]
+
     def test_join_where_primary_only(self, spark, poly_layer, dim_layer):
         with pytest.raises(OgrSqlError, match="primary"):
             execute_sql(
@@ -366,6 +390,25 @@ class TestModes:
             {"dim": dim_layer},
         )
         assert rows(out) == [(1,), (2,), (9,)]
+
+
+    def test_distinct_before_limit_offset(self, spark, dim_layer):
+        """LIMIT / OFFSET apply to the distinct list (refs 1, 1, 2, 9),
+        not to the raw rows."""
+        def q(sql):
+            return [tuple(r) for r in execute_sql(
+                spark, sql, {"dim": dim_layer}
+            ).collect()]
+
+        assert q("SELECT DISTINCT ref FROM dim ORDER BY ref LIMIT 2") == [
+            (1,),
+            (2,),
+        ]
+        assert q(
+            "SELECT DISTINCT ref AS r FROM dim ORDER BY r DESC LIMIT 2 "
+            "OFFSET 1"
+        ) == [(2,), (1,)]
+        assert len(q("SELECT DISTINCT ref FROM dim LIMIT 3")) == 3
 
 
 class TestParserErrors:

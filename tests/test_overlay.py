@@ -141,3 +141,57 @@ class TestKeepLowerDim:
             intersection_join(
                 docs, z, emit_wkt=False, keep_lower_dim=True
             ).collect()
+
+
+class TestRectangleRule:
+    """Every clip path routes a zone by the one ``IsRectangle`` rule
+    (ogrgeometry.cpp:8822): a 5-vertex triangle and a bowtie whose
+    vertices take only two x and two y values are NOT rectangles, so
+    their pieces come from the exact polygon clip, never the envelope."""
+
+    @pytest.mark.parametrize(
+        "zone_wkt,want",
+        [
+            ("POLYGON ((0 0,0 0,1 0,1 1,0 0))", 0.5),  # triangle
+            ("POLYGON ((0 0,1 1,0 1,1 0,0 0))", None),  # bowtie
+        ],
+    )
+    @pytest.mark.parametrize("path", ["area", "wkt", "wkb", "strtree"])
+    def test_degenerate_rings_clip_exactly(self, spark, zone_wkt, want, path):
+        import numpy as np
+
+        from gdal_spark.geometry.boolean import (
+            rects_polys_intersection_area,
+            weighted_triangles,
+        )
+        from gdal_spark.geometry.envelope import as_polys
+        from gdal_spark.geometry.wkt import parse_wkt
+        from gdal_spark.operators.overlay import AREA_EPS
+        from gdal_spark.operators.pip_join import with_wkb_geometry
+        from gdal_spark.operators.strtree_join import clip_join_strtree
+
+        exact = rects_polys_intersection_area(
+            np.array([[0.0, 0.0, 1.0, 1.0]]),
+            *weighted_triangles(as_polys(*parse_wkt(zone_wkt))),
+        )[0]
+        if want is not None:
+            assert exact == want
+        docs = spark.createDataFrame(
+            [(1, 0.0, 0.0, 1.0, 1.0)],
+            "doc_id long, xmin double, ymin double, xmax double, ymax double",
+        )
+        z = spark.createDataFrame([(7, zone_wkt)], "zone_id long, geom_wkt string")
+        if path == "area":
+            out = intersection_join(docs, z, zoom=3, emit_wkt=False)
+        elif path == "wkt":
+            out = intersection_join(docs, z, zoom=3, emit_wkt=True)
+        elif path == "wkb":
+            zb = with_wkb_geometry(z).drop("geom_wkt")
+            out = intersection_join(
+                docs, zb, zoom=3, emit_wkt=False, wkt_col="geom_wkb",
+                geom_format="wkb",
+            )
+        else:
+            out = clip_join_strtree(docs, z)
+        got = [(r.doc_id, r.zone_id, r.piece_area) for r in out.collect()]
+        assert got == ([(1, 7, exact)] if exact > AREA_EPS else [])

@@ -29,6 +29,8 @@ class TestWkbKernels:
             ("POLYGON ((0 0,4 0,4 3,2 3,0 3,0 0))", False),  # 6 points
             ("POLYGON ((0 0,4 0,4 3,0 3,0 0),(1 1,2 1,2 2,1 2,1 1))", False),
             ("MULTIPOLYGON (((0 0,4 0,4 3,0 3,0 0)))", False),
+            ("POLYGON ((0 0,4 0,4 3,0 3))", True),  # 4 points, unclosed
+            ("POLYGON ((0 0,0 0,1 0,1 1,0 0))", False),  # 5-vertex triangle
         ],
     )
     def test_is_rectangle_parity(self, wkt, is_rect):
@@ -63,6 +65,28 @@ class TestWkbJoinParity:
         got = sorted(
             (r.doc_id, r.zone_id)
             for r in pip_join(docs, rz_wkb, wkt_col="geom_wkb", geom_format="wkb")
+            .select("doc_id", "zone_id")
+            .collect()
+        )
+        assert got == want
+        assert len(got) > 0
+
+    @pytest.mark.parametrize("index", ["s2", "hex"])
+    def test_rich_layer_bit_parity_other_indexes(self, spark, sf_dir, index):
+        """The S2 and hex indexes read WKB zones through the same decoder:
+        same rows as the WKT mercator join."""
+        docs = corpus.load_docs(spark, sf_dir)
+        rz = zones.rich_zones(spark)
+        want = sorted(
+            (r.doc_id, r.zone_id)
+            for r in pip_join(docs, rz).select("doc_id", "zone_id").collect()
+        )
+        rz_wkb = with_wkb_geometry(rz).drop("geom_wkt")
+        got = sorted(
+            (r.doc_id, r.zone_id)
+            for r in pip_join(
+                docs, rz_wkb, wkt_col="geom_wkb", geom_format="wkb", index=index
+            )
             .select("doc_id", "zone_id")
             .collect()
         )

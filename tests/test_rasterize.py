@@ -64,3 +64,20 @@ def test_supercover_clips_outside_grid():
     other = np.ones(256, dtype=bool)
     other[iy] = False
     assert not got[other, :].any()
+
+
+def test_degenerate_triangle_burns_as_a_triangle(spark):
+    """A triangle written with a repeated vertex (5 points, two x and two
+    y values) is not IsRectangle, so it burns exactly like the same
+    triangle written with 4 points, not like its envelope."""
+    from gdal_spark.operators.rasterize import rasterize_counts
+
+    def burned(wkt):
+        z = spark.createDataFrame([(1, wkt)], "zone_id long, geom_wkt string")
+        return sorted(
+            tuple(r) for r in rasterize_counts(z, 3).collect()
+        )
+
+    tri = burned("POLYGON ((0 0,0 0,10 0,10 10,0 0))")
+    assert tri == burned("POLYGON ((0 0,10 0,10 10,0 0))")
+    assert tri != burned("POLYGON ((0 0,10 0,10 10,0 10,0 0))")

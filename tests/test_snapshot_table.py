@@ -54,6 +54,28 @@ def test_append_time_travel_incremental(spark, root):
     assert t.incremental(3, 3).columns == ["k", "tag"]
 
 
+def test_incremental_keeps_a_column_added_mid_range(spark, root):
+    """The changelog scan reads like read(): over appends (k; k+lang; k)
+    the added files' schemas differ, so the scan merges them instead of
+    taking one file's schema."""
+    t = SnapshotTable(spark, root)
+    t.append(spark.range(0, 3).select(F.col("id").alias("k")))
+    t.append(
+        spark.range(3, 5).select(
+            F.col("id").alias("k"), F.lit("en").alias("lang")
+        )
+    )
+    t.append(spark.range(5, 6).select(F.col("id").alias("k")))
+    inc = t.incremental(0)
+    assert sorted(inc.columns) == sorted(t.read().columns) == ["k", "lang"]
+    assert sorted(r["k"] for r in inc.filter(F.col("lang") == "en").collect()) == [
+        3,
+        4,
+    ]
+    assert inc.count() == 6
+    assert t.incremental(2).columns == ["k"]  # one file, its own schema
+
+
 def test_overwrite_and_time_travel_across_it(spark, root):
     t = SnapshotTable(spark, root)
     t.append(_batch(spark, 0, 10, "a"))
