@@ -6,11 +6,12 @@ The envelope is the engine's first-stage filter everywhere, mirroring the
 reference's bbox short-circuits (ogr/ogrgeometry.cpp:586-593 bbox reject;
 ogr/ogrsf_frmts/generic/ogrlayer.cpp:2276-2303 rect-filter accept).
 
-:func:`zone_geometry` decodes a zone (WKT str or WKB bytes) once per
-executor process into its polygons, envelope and ``IsRectangle`` flag;
-the cell index, the ray-cast refine, the clip kernels and the STR-tree
-joins all read that one entry, so they agree on every zone by
-construction.
+:class:`ZoneGeometry` is the one decoded form of a zone (WKT str or WKB
+bytes): polygons with closed rings, envelope and ``IsRectangle`` flag.
+The broadcast joins build it once per zone on the driver when they
+prepare their cell index; the ray-cast refine, the clip kernels and the
+STR-tree joins read it through the executor cache :func:`zone_geometry`,
+so every path agrees on every zone by construction.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ __all__ = [
     "wkt_is_rectangle",
     "is_rectangle",
     "as_polys",
+    "decode",
     "zone_geometry",
     "ZoneGeometry",
 ]
@@ -103,14 +105,30 @@ def as_polys(typ: str, payload) -> list:
     return payload if typ == "MULTIPOLYGON" else [payload]
 
 
+def _closed(ring: np.ndarray) -> np.ndarray:
+    """``ring`` with its first vertex repeated at the end when the
+    decoder handed back an unclosed spelling (both decoders accept one)."""
+    if len(ring) and (ring[0] != ring[-1]).any():
+        return np.vstack([ring, ring[:1]])
+    return ring
+
+
+def decode(g, geom_format: str):
+    """(typ, payload) of a WKT string (``geom_format="wkt"``) or WKB
+    bytes (``"wkb"``)."""
+    return wkb_to_payload(bytes(g)) if geom_format == "wkb" else parse_wkt(g)
+
+
 class ZoneGeometry:
-    """One decoded zone: ``polys`` (:func:`as_polys`), ``env`` (xmin,
-    ymin, xmax, ymax) and ``is_rect`` (:func:`is_rectangle`).  The clip
-    kernels' fan triangles and rectilinear cover are derived on first
-    use and kept in the same entry."""
+    """One decoded zone: ``polys`` (:func:`as_polys`, every ring closed
+    once here so the ray-cast, the fan triangles and the areas all see
+    the closing edge), ``env`` (xmin, ymin, xmax, ymax) and ``is_rect``
+    (:func:`is_rectangle` on the payload as decoded).  The clip kernels'
+    fan triangles and rectilinear cover are derived on first use and
+    kept in the same entry."""
 
     def __init__(self, typ: str, payload):
-        self.polys = as_polys(typ, payload)
+        self.polys = [[_closed(r) for r in poly] for poly in as_polys(typ, payload)]
         self.env = _rings_envelope([r for poly in self.polys for r in poly])
         self.is_rect = is_rectangle(typ, payload)
 
@@ -128,10 +146,12 @@ class ZoneGeometry:
         return rectilinear_rects(self.polys)
 
 
-# executor-level decoded-zone cache: the join kernels read the zone
-# geometry CARRIED THROUGH THE JOIN (no driver collect — a method layer
-# that doesn't fit the driver still works), decoding each distinct
-# geometry at most once per executor process
+# executor-level decoded-zone cache for the kernels that read the zone
+# geometry carried on their candidate rows (refine, clip, burn): each
+# distinct geometry is decoded at most once per executor process.  The
+# broadcast joins' driver-side prepare decodes its bounded dim layer
+# once per call with ZoneGeometry(*decode(g)) and keeps nothing; the
+# shuffle path never collects the layer at all.
 _ZONE_CACHE: dict = {}
 _ZONE_CACHE_MAX = 65536
 
@@ -143,8 +163,7 @@ def zone_geometry(g, geom_format: str) -> ZoneGeometry:
         g = bytes(g)  # Arrow may hand back bytearray (unhashable)
     z = _ZONE_CACHE.get(g)
     if z is None:
-        decoded = wkb_to_payload(g) if geom_format == "wkb" else parse_wkt(g)
-        z = ZoneGeometry(*decoded)
+        z = ZoneGeometry(*decode(g, geom_format))
         if len(_ZONE_CACHE) >= _ZONE_CACHE_MAX:
             _ZONE_CACHE.clear()
         _ZONE_CACHE[g] = z

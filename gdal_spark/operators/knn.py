@@ -7,8 +7,10 @@ grow the search region ring-by-ring around the query point until the
 k-th nearest candidate is provably closer than anything outside.
 
 Spark-first shape: the target layer (a dim table, like the reference's
-in-memory quadtree) is bucketed into a uniform degree grid and shipped
-once per executor inside a mapInPandas closure; the doc corpus streams
+in-memory quadtree) is collected once per call (the bounded
+``operators/dim.py`` ``collect_dim``; the ``*_shuffle`` twins never
+collect), bucketed into a uniform degree grid and shipped once per
+executor inside a mapInPandas closure; the doc corpus streams
 through in Arrow batches with ZERO shuffle — the output is produced
 map-side, partition-parallel.  Distance metric: squared euclidean in
 degrees (IEEE-exact, so the DuckDB brute-force oracle agrees bit-for-bit
@@ -24,6 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from gdal_spark.operators.dim import collect_dim
 
 # ------------------------------------------------------------------ targets
 N_TARGETS = 2000
@@ -49,6 +53,14 @@ def knn_targets(spark: SparkSession, n: int = N_TARGETS) -> DataFrame:
 
 # ----------------------------------------------------------------- operator
 CELL_DEG = 4.0  # degree-grid cell size for the ring index
+
+
+def _collect_targets(targets: DataFrame, twin: str):
+    """(tlon, tlat, target_id) arrays of the bounded dim-layer collect."""
+    t = collect_dim(targets.select("target_id", "tlon", "tlat"), "target layer",
+                    f"{twin}, which never collects the targets")
+    return (t["tlon"].to_numpy(np.float64), t["tlat"].to_numpy(np.float64),
+            t["target_id"].to_numpy(np.int64))
 
 
 def _build_buckets(tlon: np.ndarray, tlat: np.ndarray, cell: float):
@@ -137,10 +149,7 @@ def knn_join(
     reference's in-memory quadtree) and bucketed per executor; docs never
     shuffle.
     """
-    tpd = targets.select("target_id", "tlon", "tlat").toPandas()
-    tlon = tpd["tlon"].to_numpy(np.float64)
-    tlat = tpd["tlat"].to_numpy(np.float64)
-    tid = tpd["target_id"].to_numpy(np.int64)
+    tlon, tlat, tid = _collect_targets(targets, "knn_join_shuffle")
     max_ring = int(np.ceil(360.0 / cell_deg))  # full-world fallback bound
 
     from pyspark.sql.types import (
@@ -374,10 +383,7 @@ def radius_join(
     radius2 = float(radius2_sql)
     radius = float(np.sqrt(radius2))
     rmax = int(np.ceil(radius / cell_deg)) + 1
-    tpd = targets.select("target_id", "tlon", "tlat").toPandas()
-    tlon = tpd["tlon"].to_numpy(np.float64)
-    tlat = tpd["tlat"].to_numpy(np.float64)
-    tid = tpd["target_id"].to_numpy(np.int64)
+    tlon, tlat, tid = _collect_targets(targets, "radius_join_shuffle")
 
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 

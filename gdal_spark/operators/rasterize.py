@@ -3,8 +3,8 @@
 Re-answers gdal_rasterize (alg/gdalrasterize.cpp:573-900 scanline fill,
 MERGE_ALG=REPLACE/ADD, burn attribute) tile-parallel:
 
-  1. zones explode to covered cells (same broadcast index the joins
-     use);
+  1. zones explode to covered cells (the cell index the joins prepare
+     on the driver);
   2. one applyInPandas group per tile: pixel-center containment masks —
      rect zones via 1-D interval masks (outer product), general
      polygons via the vectorized ray-cast over the 256x256 center grid
@@ -111,6 +111,35 @@ def _supercover_mask(ring: np.ndarray, lon_e: np.ndarray, lat_e: np.ndarray):
     return mask
 
 
+def _zone_mask(wkt: str, lon, lat, edges) -> np.ndarray:
+    """(256, 256) TMS-row (south-up) burn mask of one zone: pixel-center
+    containment, or with ``edges`` = :func:`_pixel_edges` the
+    ALL_TOUCHED cell overlap.  Rectangle polygons use 1-D interval
+    masks (outer product), the rest the vectorized ray-cast over the
+    center grid (plus the edge supercover when all-touched)."""
+    mask = np.zeros((TILE, TILE), dtype=bool)
+    for rings in zone_geometry(wkt, "wkt").polys:
+        ring0 = rings[0]
+        if is_rectangle("POLYGON", rings):
+            x0, x1 = ring0[:, 0].min(), ring0[:, 0].max()
+            y0, y1 = ring0[:, 1].min(), ring0[:, 1].max()
+            if edges is None:
+                mask |= np.outer((lat > y0) & (lat < y1), (lon > x0) & (lon < x1))
+            else:
+                lon_e, lat_e = edges
+                mask |= np.outer(
+                    (lat_e[:-1] < y1) & (y0 < lat_e[1:]),
+                    (lon_e[:-1] < x1) & (x0 < lon_e[1:]),
+                )
+            continue
+        gx, gy = np.meshgrid(lon, lat)
+        mask |= points_in_polygon(gx.ravel(), gy.ravel(), rings).reshape(TILE, TILE)
+        if edges is not None:
+            for ring in rings:
+                mask |= _supercover_mask(ring, *edges)
+    return mask
+
+
 def rasterize(
     zones: DataFrame,
     zoom: int,
@@ -122,45 +151,21 @@ def rasterize(
     """(zoom, tx, ty, n_burned, data) — data is the 256x256 uint8 burn
     raster (burn value = zone_id % 255 + 1, 0 = nodata), row 0 = north.
 
-    The burn kernel reads each zone's WKT off its candidate row (parsed
-    once per executor via the shared geometry cache) — no driver-side
-    collect of the method layer."""
+    The zone cover is the joins' driver-prepared cell index
+    (:func:`zone_cell_index`: one bounded collect of the method layer);
+    the burn kernel reads each zone's WKT off its cell row, parsed once
+    per executor via the shared geometry cache."""
     cells = zone_cell_index(zones.select(zone_id_col, wkt_col), zoom, wkt_col)
 
     def burn_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         lon, lat = _pixel_centers(tx, ty, zoom)
-        if all_touched:
-            lon_e, lat_e = _pixel_edges(tx, ty, zoom)
+        edges = _pixel_edges(tx, ty, zoom) if all_touched else None
         img = np.zeros((TILE, TILE), dtype=np.uint16)
         any_mask = np.zeros((TILE, TILE), dtype=bool)
         wkt_of = dict(zip(pdf[zone_id_col], pdf[wkt_col]))
         for zid in np.sort(pdf[zone_id_col].unique()):
-            polys = zone_geometry(wkt_of[zid], "wkt").polys
-            mask = np.zeros((TILE, TILE), dtype=bool)  # TMS rows (south-up)
-            for rings in polys:
-                ring0 = rings[0]
-                is_rect = is_rectangle("POLYGON", rings)
-                if is_rect and all_touched:
-                    x0, x1 = ring0[:, 0].min(), ring0[:, 0].max()
-                    y0, y1 = ring0[:, 1].min(), ring0[:, 1].max()
-                    mask |= np.outer(
-                        (lat_e[:-1] < y1) & (y0 < lat_e[1:]),
-                        (lon_e[:-1] < x1) & (x0 < lon_e[1:]),
-                    )
-                elif is_rect:
-                    x0, x1 = ring0[:, 0].min(), ring0[:, 0].max()
-                    y0, y1 = ring0[:, 1].min(), ring0[:, 1].max()
-                    mask |= np.outer(
-                        (lat > y0) & (lat < y1), (lon > x0) & (lon < x1)
-                    )
-                else:
-                    gx, gy = np.meshgrid(lon, lat)
-                    hit = points_in_polygon(gx.ravel(), gy.ravel(), rings)
-                    mask |= hit.reshape(TILE, TILE)
-                    if all_touched:
-                        for ring in rings:
-                            mask |= _supercover_mask(ring, lon_e, lat_e)
+            mask = _zone_mask(wkt_of[zid], lon, lat, edges)
             burn = np.uint16(int(zid) % 255 + 1)
             if merge == "add":
                 img[mask] += burn
@@ -249,21 +254,7 @@ def rasterize_values(
         img = np.zeros((TILE, TILE), dtype=np.int64)  # TMS rows (south-up)
         wkt_of = dict(zip(pdf[zone_id_col], pdf[wkt_col]))
         for zid in np.sort(pdf[zone_id_col].unique()):
-            polys = zone_geometry(wkt_of[zid], "wkt").polys
-            mask = np.zeros((TILE, TILE), dtype=bool)
-            for rings in polys:
-                ring0 = rings[0]
-                is_rect = is_rectangle("POLYGON", rings)
-                if is_rect:
-                    x0, x1 = ring0[:, 0].min(), ring0[:, 0].max()
-                    y0, y1 = ring0[:, 1].min(), ring0[:, 1].max()
-                    mask |= np.outer(
-                        (lat > y0) & (lat < y1), (lon > x0) & (lon < x1)
-                    )
-                else:
-                    gx, gy = np.meshgrid(lon, lat)
-                    hit = points_in_polygon(gx.ravel(), gy.ravel(), rings)
-                    mask |= hit.reshape(TILE, TILE)
+            mask = _zone_mask(wkt_of[zid], lon, lat, None)
             burn = int(zid) % 255 + 1
             if merge == "add":
                 img[mask] += burn

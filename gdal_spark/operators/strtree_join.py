@@ -17,14 +17,14 @@ When to prefer which at 100 TB:
     into thousands of cells or makes hot cells with many candidates;
     the R-tree adapts to feature size with no zoom knob.
 
-Zone-layer contract: dim-sized (driver-materialized + rebroadcast, the
-same documented contract as the kNN target table; the carried-WKT cell
-join remains the beyond-driver-memory path).  All three joins ship
-their dim layer through one helper (:func:`_broadcast_dim`: bounded
-row guard, driver collect, keyed broadcast) and build one tree per
-executor process through another (:func:`_tree_of`).  Exactness:
-candidates are envelope hits; every candidate goes through the SAME
-per-unique-zone kernels as the cell joins — zones decoded by the shared
+Zone-layer contract: dim-sized.  All three joins collect their dim
+layer through the one bounded driver collect every broadcast join uses
+(``operators/dim.py`` ``collect_dim``, at most ``MAX_DIM_ROWS`` rows,
+raising with a pointer to the distributed twin above that) and ship it
+as a keyed broadcast (:func:`_broadcast_dim`); one tree per executor
+process is built through :func:`_tree_of`.  Exactness: candidates are
+envelope hits; every candidate goes through the SAME per-unique-zone
+kernels as the cell joins — zones decoded by the shared
 ``zone_geometry`` cache, the ray-cast of pip_join's refine, the clip
 areas of overlay's kernel — so results are bit-identical to the
 cell-join twins (pinned in tests/test_strtree_join.py).
@@ -43,6 +43,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from gdal_spark.geometry.envelope import zone_geometry
 from gdal_spark.geometry.pip import points_in_polygon
 from gdal_spark.geometry.strtree import STRTree
+from gdal_spark.operators.dim import collect_dim
 
 # one tree per broadcast payload per executor process, keyed by an
 # explicit token SHIPPED IN the broadcast value — id(bc) would be the
@@ -52,26 +53,13 @@ from gdal_spark.geometry.strtree import STRTree
 _TREE_CACHE: dict[str, tuple] = {}
 _KEY_SEQ = [0]
 
-# dim-layer contract, ENFORCED: the method layer is driver-materialized
-# (toPandas) then broadcast, so a corpus-sized layer here would OOM the
-# driver silently.  The guard counts at most MAX_DIM_ROWS+1 rows (a
-# bounded limit().count(), never a full scan) and fails loudly with a
-# pointer to the cell-join twin that handles the beyond-driver case.
-MAX_DIM_ROWS = 1_000_000
 
-
-def _broadcast_dim(df: DataFrame, what: str, twin: str, limit: int):
+def _broadcast_dim(df: DataFrame, what: str, twin: str):
     """Broadcast a dim layer as ``(key, *columns)`` (numpy arrays in
-    ``df``'s column order) after the bounded row guard; ``key`` is a
-    driver-unique token: applicationId x per-process sequence number."""
-    n = df.limit(limit + 1).count()
-    if n > limit:
-        raise ValueError(
-            f"strtree_join: {what} has more than {limit:,} rows — it no "
-            f"longer fits the driver-materialized dim-layer contract. "
-            f"Use the {twin} twin, which never collects the method layer."
-        )
-    pdf = df.toPandas()
+    ``df``'s column order), collected through the bounded
+    :func:`collect_dim`; ``key`` is a driver-unique token:
+    applicationId x per-process sequence number."""
+    pdf = collect_dim(df, what, twin)
     sc = df.sparkSession.sparkContext
     _KEY_SEQ[0] += 1
     key = f"{sc.applicationId}/{_KEY_SEQ[0]}"
@@ -103,7 +91,6 @@ def pip_join_strtree(
     id_col: str = "doc_id",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    max_dim_rows: int = MAX_DIM_ROWS,
 ) -> DataFrame:
     """(doc_id, zone_id) pairs where the point lies inside the zone
     polygon (pip_join's exact containment semantics — same ray-cast
@@ -111,8 +98,7 @@ def pip_join_strtree(
     bc = _broadcast_dim(
         zones.select(zone_id_col, wkt_col),
         "zone layer",
-        "pip_join (cell join)",
-        max_dim_rows,
+        "pip_join(strategy='shuffle'), the cell join that never collects it",
     )
 
     out_schema = StructType(
@@ -152,7 +138,6 @@ def clip_join_strtree(
     zone_id_col: str = "zone_id",
     wkt_col: str = "geom_wkt",
     id_col: str = "doc_id",
-    max_dim_rows: int = MAX_DIM_ROWS,
 ) -> DataFrame:
     """Exact intersection pieces (doc_id, zone_id, piece_area) with the
     STR-tree candidate stage — the north-star "STR-tree per partition
@@ -172,8 +157,7 @@ def clip_join_strtree(
     bc = _broadcast_dim(
         zones.select(zone_id_col, wkt_col),
         "zone layer",
-        "intersection_join (cell join)",
-        max_dim_rows,
+        "parts under that bound (the cell join has the same bound)",
     )
 
     out_schema = StructType(
@@ -228,7 +212,6 @@ def knn_join_strtree(
     id_col: str = "doc_id",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    max_dim_rows: int = MAX_DIM_ROWS,
 ) -> DataFrame:
     """kNN twin backed by the per-executor STR tree (same dim-layer
     contract and the same exact semantics as knn_join: squared
@@ -246,8 +229,7 @@ def knn_join_strtree(
             "target_id", *(F.col(c).cast("double").alias(c) for c in ("tlon", "tlat"))
         ),
         "target layer",
-        "knn_join (cell-ring join)",
-        max_dim_rows,
+        "knn_join_shuffle, the cell-ring join that never collects them",
     )
 
     from pyspark.sql.types import IntegerType

@@ -92,23 +92,26 @@ def test_query_matches_oracle(spark, sf_dir, name):
     spark_rows = [tuple(r) for r in sdf.collect()]
 
     con = _duck(sf_dir)
-    rel = con.sql(entry_mod.oracle_sql()[name])
-    # The driver compares via pandas: DuckDB HUGEINT / DECIMAL / unsigned
-    # columns degrade to float64 or object there and hash-mismatch the
-    # Spark int64 twin even when values are equal (r03 red row:
-    # local_supplier_volume — SUM(BIGINT) widens to HUGEINT).  Oracles
-    # must CAST aggregates back to BIGINT/DOUBLE explicitly.
-    for col, t in zip(rel.columns, [str(t).upper() for t in rel.types]):
-        assert not any(
-            k in t for k in ("HUGEINT", "DECIMAL", "UINTEGER", "UBIGINT",
-                             "USMALLINT", "UTINYINT")
-        ), (
-            f"{name}.{col}: oracle returns {t} — pandas degrades it to "
-            f"float/object in the driver; CAST the aggregate explicitly"
-        )
-    res = con.execute(entry_mod.oracle_sql()[name])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
+    try:
+        rel = con.sql(entry_mod.oracle_sql()[name])
+        # The driver compares via pandas: DuckDB HUGEINT / DECIMAL / unsigned
+        # columns degrade to float64 or object there and hash-mismatch the
+        # Spark int64 twin even when values are equal (r03 red row:
+        # local_supplier_volume — SUM(BIGINT) widens to HUGEINT).  Oracles
+        # must CAST aggregates back to BIGINT/DOUBLE explicitly.
+        for col, t in zip(rel.columns, [str(t).upper() for t in rel.types]):
+            assert not any(
+                k in t for k in ("HUGEINT", "DECIMAL", "UINTEGER", "UBIGINT",
+                                 "USMALLINT", "UTINYINT")
+            ), (
+                f"{name}.{col}: oracle returns {t} — pandas degrades it to "
+                f"float/object in the driver; CAST the aggregate explicitly"
+            )
+        res = con.execute(entry_mod.oracle_sql()[name])
+        duck_cols = [d[0] for d in res.description]
+        duck_rows = res.fetchall()
+    finally:
+        con.close()
 
     assert sorted(spark_cols) == sorted(duck_cols), f"{name}: column names differ"
     assert len(spark_rows) == len(duck_rows), f"{name}: row counts differ"

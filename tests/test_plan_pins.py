@@ -145,6 +145,44 @@ class TestBroadcastDimJoins:
         )
 
 
+class TestPreparedZoneBranches:
+    """The broadcast joins prepare the zone layer on the driver and plan
+    only the branches it needs: no Union and one Python stage for an
+    all-polygon layer, no Python stage for an all-rectangle layer."""
+
+    def test_pip_join_polygon_layer_plans_refine_only(self, spark, docs):
+        from gdal_spark.operators.pip_join import pip_join
+
+        plan = _plan(pip_join(docs, zones.rich_zones(spark)))
+        assert "Union" not in plan, plan
+        assert plan.count("ArrowEvalPython") == 1, plan
+
+    def test_pip_join_rect_layer_plans_no_python(self, spark, docs):
+        from gdal_spark.operators.pip_join import pip_join
+
+        z = zones.rect_zones(spark).drop("zxmin", "zymin", "zxmax", "zymax")
+        plan = _plan(pip_join(docs, z))
+        assert "ArrowEvalPython" not in plan, plan
+        assert "Union" not in plan, plan
+
+    def test_clip_polygon_layer_plans_kernel_only(self, spark, sf_dir):
+        from gdal_spark.operators.overlay import intersection_join
+
+        pdocs = corpus.load_polydocs(spark, sf_dir, replicate=1)
+        plan = _plan(intersection_join(pdocs, zones.rich_zones(spark), emit_wkt=False))
+        assert "Union" not in plan, plan
+        assert plan.count("MapInPandas") == 1, plan
+
+    def test_clip_rect_layer_plans_no_python(self, spark, sf_dir):
+        from gdal_spark.operators.overlay import intersection_join
+
+        pdocs = corpus.load_polydocs(spark, sf_dir, replicate=1)
+        cz = zones.clip_zones(spark).drop("zxmin", "zymin", "zxmax", "zymax")
+        plan = _plan(intersection_join(pdocs, cz, emit_wkt=False))
+        assert "MapInPandas" not in plan and "Python" not in plan, plan
+        assert "Union" not in plan, plan
+
+
 class TestBoundedShuffles:
     """Print-census UPPER BOUNDS for the two multi-stage pipelines.
     The bounds are the current known-good census (minhash: 1 real
@@ -313,12 +351,14 @@ class TestRound4fPlans:
         assert "SortMergeJoin" not in plan, plan
 
     def test_pip_join_hex_point_side_is_jvm(self, spark, sf_dir):
-        # hex assignment is pure codegen: the only Python prints are the
-        # zone-side cell cover (MapInPandas over the dim layer) and the
-        # shared Arrow refine; the join on (hex_q, hex_r) broadcasts
+        # hex assignment is pure codegen: the zone-side cell cover is
+        # prepared on the driver and planned as a local relation, so the
+        # only Python print is the shared Arrow refine; the join on
+        # (hex_q, hex_r) broadcasts
         plan = self._q(spark, sf_dir, "pip_join_hex")
-        assert plan.count("MapInPandas") == 1, plan  # zone cover only
-        assert "ArrowEvalPython" in plan, plan  # the exact refine
+        assert plan.count("MapInPandas") == 0, plan
+        assert plan.count("LocalTableScan") == 1, plan  # zone cover
+        assert plan.count("ArrowEvalPython") == 1, plan  # the exact refine
         assert "BroadcastHashJoin" in plan, plan
         assert "SortMergeJoin" not in plan, plan
 

@@ -132,32 +132,30 @@ def test_clip_parity_on_rich_concave_layer(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_dim_contract_guard_fires(spark, sf_dir):
+def test_dim_contract_guard_fires(spark, sf_dir, monkeypatch):
     """The method layer is driver-materialized: above the contract
     threshold the join must fail LOUDLY (pointing at the cell-join
     twin), never silently OOM the driver."""
     import pytest
 
+    from gdal_spark.operators import dim
     from gdal_spark.operators.knn import knn_targets
     from gdal_spark.operators.strtree_join import knn_join_strtree
 
     docs = corpus.load_docs(spark, sf_dir)
     z = zones.rect_zones(spark).drop("zxmin", "zymin", "zxmax", "zymax")
-    with pytest.raises(ValueError, match="cell join"):
-        pip_join_strtree(docs, z, max_dim_rows=2)
-    with pytest.raises(ValueError, match="cell join"):
-        clip_join_strtree(
-            corpus.load_polydocs(spark, sf_dir),
-            zones.clip_zones(spark).drop(
-                "zxmin", "zymin", "zxmax", "zymax"
-            ),
-            max_dim_rows=2,
-        )
-    with pytest.raises(ValueError, match="cell-ring"):
-        knn_join_strtree(
-            docs.select("doc_id", "lon", "lat"),
-            knn_targets(spark),
-            max_dim_rows=2,
-        )
+    with monkeypatch.context() as m:
+        m.setattr(dim, "MAX_DIM_ROWS", 2)
+        with pytest.raises(ValueError, match="cell join"):
+            pip_join_strtree(docs, z)
+        with pytest.raises(ValueError, match="cell join"):
+            clip_join_strtree(
+                corpus.load_polydocs(spark, sf_dir),
+                zones.clip_zones(spark).drop(
+                    "zxmin", "zymin", "zxmax", "zymax"
+                ),
+            )
+        with pytest.raises(ValueError, match="cell-ring"):
+            knn_join_strtree(docs.select("doc_id", "lon", "lat"), knn_targets(spark))
     # under the threshold the join still runs
     assert pip_join_strtree(docs, z).count() > 0
