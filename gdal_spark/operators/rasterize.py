@@ -3,8 +3,9 @@
 Re-answers gdal_rasterize (alg/gdalrasterize.cpp:573-900 scanline fill,
 MERGE_ALG=REPLACE/ADD, burn attribute) tile-parallel:
 
-  1. zones explode to covered cells (the cell index the joins prepare
-     on the driver);
+  1. zones explode to covered cells (the joins' cell cover, run on the
+     executors: the burned layer is never collected, and its cell count
+     grows as 4^zoom);
   2. one applyInPandas group per tile: pixel-center containment masks —
      rect zones via 1-D interval masks (outer product), general
      polygons via the vectorized ray-cast over the 256x256 center grid
@@ -36,7 +37,7 @@ from pyspark.sql.types import (
 from gdal_spark.geometry import mercator
 from gdal_spark.geometry.envelope import is_rectangle, zone_geometry
 from gdal_spark.geometry.pip import points_in_polygon
-from gdal_spark.operators.pip_join import zone_cell_index
+from gdal_spark.operators.pip_join import _zone_cells
 
 TILE = 256
 
@@ -140,6 +141,36 @@ def _zone_mask(wkt: str, lon, lat, edges) -> np.ndarray:
     return mask
 
 
+def _burn_tiles(
+    zones, zoom, merge, wkt_col, zone_id_col, all_touched, dtype, emit, schema
+):
+    """One applyInPandas group per covering tile (cell_tx, cell_ty),
+    covered in a mapInPandas on the executors (nothing is collected):
+    every zone's mask burned in ascending zone order (REPLACE: later
+    overwrites; ADD accumulates) into a TMS-row (south-up) ``dtype``
+    image, then ``emit(tx, ty, img, any_mask)``."""
+    z = zones.select(zone_id_col, wkt_col)
+    cells = _zone_cells(z, "mercator", zoom, wkt_col, "wkt", on_driver=False)[0]
+
+    def burn_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        tx, ty = int(key[0]), int(key[1])
+        lon, lat = _pixel_centers(tx, ty, zoom)
+        edges = _pixel_edges(tx, ty, zoom) if all_touched else None
+        img = np.zeros((TILE, TILE), dtype=dtype)
+        any_mask = np.zeros((TILE, TILE), dtype=bool)
+        wkt_of = dict(zip(pdf[zone_id_col], pdf[wkt_col]))
+        for zid in np.sort(pdf[zone_id_col].unique()):
+            mask = _zone_mask(wkt_of[zid], lon, lat, edges)
+            if merge == "add":
+                img[mask] += dtype(int(zid) % 255 + 1)
+            else:
+                img[mask] = dtype(int(zid) % 255 + 1)
+            any_mask |= mask
+        return emit(tx, ty, img, any_mask)
+
+    return cells.groupBy("cell_tx", "cell_ty").applyInPandas(burn_tile, schema)
+
+
 def rasterize(
     zones: DataFrame,
     zoom: int,
@@ -151,27 +182,10 @@ def rasterize(
     """(zoom, tx, ty, n_burned, data) — data is the 256x256 uint8 burn
     raster (burn value = zone_id % 255 + 1, 0 = nodata), row 0 = north.
 
-    The zone cover is the joins' driver-prepared cell index
-    (:func:`zone_cell_index`: one bounded collect of the method layer);
-    the burn kernel reads each zone's WKT off its cell row, parsed once
-    per executor via the shared geometry cache."""
-    cells = zone_cell_index(zones.select(zone_id_col, wkt_col), zoom, wkt_col)
+    The burn (:func:`_burn_tiles`) reads each zone's WKT off its cell
+    row, parsed once per executor via the shared geometry cache."""
 
-    def burn_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        lon, lat = _pixel_centers(tx, ty, zoom)
-        edges = _pixel_edges(tx, ty, zoom) if all_touched else None
-        img = np.zeros((TILE, TILE), dtype=np.uint16)
-        any_mask = np.zeros((TILE, TILE), dtype=bool)
-        wkt_of = dict(zip(pdf[zone_id_col], pdf[wkt_col]))
-        for zid in np.sort(pdf[zone_id_col].unique()):
-            mask = _zone_mask(wkt_of[zid], lon, lat, edges)
-            burn = np.uint16(int(zid) % 255 + 1)
-            if merge == "add":
-                img[mask] += burn
-            else:  # replace: ascending zone order, later overwrites
-                img[mask] = burn
-            any_mask |= mask
+    def emit(tx, ty, img, any_mask):
         out = np.flipud(np.clip(img, 0, 255).astype(np.uint8))  # north-up
         return pd.DataFrame(
             {
@@ -183,7 +197,10 @@ def rasterize(
             }
         )
 
-    return cells.groupBy("cell_tx", "cell_ty").applyInPandas(burn_tile, _TILE_SCHEMA)
+    return _burn_tiles(
+        zones, zoom, merge, wkt_col, zone_id_col, all_touched, np.uint16, emit,
+        _TILE_SCHEMA,
+    )
 
 
 def rasterize_counts(zones: DataFrame, zoom: int, **kw) -> DataFrame:
@@ -246,20 +263,8 @@ def rasterize_values(
     wins at overlaps), ADD accumulates.  Emits (zoom, tx, ty, ci, rj,
     burn) for hit pixels only; rj is the TMS (south-up) row index, same
     convention as the rasterize_counts oracle."""
-    cells = zone_cell_index(zones.select(zone_id_col, wkt_col), zoom, wkt_col)
 
-    def burn_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        lon, lat = _pixel_centers(tx, ty, zoom)
-        img = np.zeros((TILE, TILE), dtype=np.int64)  # TMS rows (south-up)
-        wkt_of = dict(zip(pdf[zone_id_col], pdf[wkt_col]))
-        for zid in np.sort(pdf[zone_id_col].unique()):
-            mask = _zone_mask(wkt_of[zid], lon, lat, None)
-            burn = int(zid) % 255 + 1
-            if merge == "add":
-                img[mask] += burn
-            else:
-                img[mask] = burn
+    def emit(tx, ty, img, any_mask):
         ys, xs = np.nonzero(img)
         return pd.DataFrame(
             {
@@ -272,6 +277,6 @@ def rasterize_values(
             }
         )
 
-    return cells.groupBy("cell_tx", "cell_ty").applyInPandas(
-        burn_tile, _PIXEL_SCHEMA
+    return _burn_tiles(
+        zones, zoom, merge, wkt_col, zone_id_col, False, np.int64, emit, _PIXEL_SCHEMA
     )

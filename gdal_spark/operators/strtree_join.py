@@ -20,7 +20,8 @@ When to prefer which at 100 TB:
 Zone-layer contract: dim-sized.  All three joins collect their dim
 layer through the one bounded driver collect every broadcast join uses
 (``operators/dim.py`` ``collect_dim``, at most ``MAX_DIM_ROWS`` rows,
-raising with a pointer to the distributed twin above that) and ship it
+raising above that with a pointer to the distributed twin, where one
+exists — the clip join has none) and ship it
 as a keyed broadcast (:func:`_broadcast_dim`); one tree per executor
 process is built through :func:`_tree_of`.  Exactness: candidates are
 envelope hits; every candidate goes through the SAME per-unique-zone
@@ -154,11 +155,7 @@ def clip_join_strtree(
     output is BIT-IDENTICAL to intersection_join(emit_wkt=False)
     (pinned in tests/test_strtree_join.py; same DuckDB oracle as
     clip_general in the registry)."""
-    bc = _broadcast_dim(
-        zones.select(zone_id_col, wkt_col),
-        "zone layer",
-        "parts under that bound (the cell join has the same bound)",
-    )
+    bc = _broadcast_dim(zones.select(zone_id_col, wkt_col), "zone layer", None)
 
     out_schema = StructType(
         [

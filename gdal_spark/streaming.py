@@ -184,7 +184,10 @@ def stream_pip_counts(
     the STATIC zone layer through the same cell-key broadcast + refine
     pipeline the batch ``pip_join`` uses (the join and the ray-cast
     refine are stateless, so they run unchanged inside micro-batches),
-    then a streaming per-zone count.
+    then a streaming per-zone count.  For a streaming corpus
+    ``pip_join`` keeps its zone cover on the executors, so each
+    micro-batch reads the static zone layer anew (a batch call reads it
+    once, when called).
 
     This is the "zonal counters over an arriving corpus" shape: state is
     one counter per zone (bounded by the method layer, not the stream),

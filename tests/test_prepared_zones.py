@@ -8,7 +8,8 @@
   ``rect_fast`` switch and ``emit_wkt`` must still return the same rows
   on mixed, empty and WKB layers.
 * The prepare itself: one bounded collect (``collect_dim``), one Spark
-  job per call, zone columns returned unchanged.
+  job per call, zone columns returned unchanged.  Rasterize and a
+  streaming ``pip_join`` keep the executor cover: no job when called.
 """
 
 import math
@@ -17,6 +18,7 @@ import numpy as np
 import pytest
 from hypothesis import Phase, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from gdal_spark import corpus, zones
 from gdal_spark.geometry.boolean import polys_area, rects_polys_intersection_area
@@ -232,7 +234,7 @@ class TestBranchParity:
 
 
 class TestPrepare:
-    def test_collect_dim_over_the_limit_raises(self, spark, monkeypatch):
+    def test_collect_dim_over_the_limit_raises(self, spark, sf_dir, monkeypatch):
         from gdal_spark.operators import dim
 
         monkeypatch.setattr(dim, "MAX_DIM_ROWS", 39)
@@ -242,6 +244,9 @@ class TestPrepare:
         pts = spark.createDataFrame([(1, 0.0, 0.0)], "doc_id long, lon double, lat double")
         with pytest.raises(ValueError, match="strategy='shuffle'"):
             pip_join(pts, rz)
+        pdocs = corpus.load_polydocs(spark, sf_dir, replicate=1)
+        with pytest.raises(ValueError, match="no distributed version"):
+            intersection_join(pdocs, rz, emit_wkt=False)
         monkeypatch.setattr(dim, "MAX_DIM_ROWS", 40)
         assert len(dim.collect_dim(rz, "zone layer", "the twin")) == 40
 
@@ -255,3 +260,46 @@ class TestPrepare:
         finally:
             sc.setJobGroup("", "")
         assert len(sc.statusTracker().getJobIdsForGroup("prepare-zones")) == 1
+
+
+def _jobs_and_plan(spark, build):
+    """(Spark jobs ``build()`` starts, the analyzed plan of its result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("executor-cover", "call only")
+    try:
+        df = build()
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("executor-cover")
+    return len(jobs), df._jdf.queryExecution().analyzed().toString()
+
+
+class TestExecutorCover:
+    """Callers that must not collect the zone layer when called."""
+
+    def test_rasterize_covers_on_executors(self, spark):
+        from gdal_spark.operators.rasterize import rasterize, rasterize_values
+
+        for fn in (rasterize, rasterize_values):
+            jobs, plan = _jobs_and_plan(
+                spark, lambda: fn(zones.rich_zones(spark), 6)
+            )
+            assert jobs == 0, fn.__name__
+            assert plan.count("MapInPandas") == 1, plan
+            assert "LocalRelation" not in plan, plan
+
+    def test_streaming_pip_join_rereads_the_zone_layer(self, spark, sf_dir, tmp_path):
+        schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+        src = spark.readStream.schema(schema).parquet(str(tmp_path))
+        src = src.withColumn("lon", F.expr(corpus.LON_SQL)).withColumn(
+            "lat", F.expr(corpus.LAT_SQL)
+        )
+        jobs, plan = _jobs_and_plan(
+            spark, lambda: pip_join(src, zones.rich_zones(spark))
+        )
+        assert jobs == 0
+        # the executor cover (under both branches: the flags are
+        # unknown) runs in every micro-batch, reading the static zone
+        # side anew; nothing was collected at definition
+        assert "MapInPandas expand" in plan, plan
+        assert "LocalRelation" not in plan, plan
