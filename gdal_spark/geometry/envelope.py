@@ -34,6 +34,7 @@ __all__ = [
     "wkt_is_rectangle",
     "is_rectangle",
     "as_polys",
+    "closed_polys",
     "decode",
     "zone_geometry",
     "ZoneGeometry",
@@ -113,6 +114,13 @@ def _closed(ring: np.ndarray) -> np.ndarray:
     return ring
 
 
+def closed_polys(typ: str, payload) -> list:
+    """:func:`as_polys` with every ring closed — the one closing rule for
+    every reader of polygon rings (zones and docs alike), so the
+    ray-cast, the fan triangles and the areas all see the closing edge."""
+    return [[_closed(r) for r in poly] for poly in as_polys(typ, payload)]
+
+
 def decode(g, geom_format: str):
     """(typ, payload) of a WKT string (``geom_format="wkt"``) or WKB
     bytes (``"wkb"``)."""
@@ -120,15 +128,14 @@ def decode(g, geom_format: str):
 
 
 class ZoneGeometry:
-    """One decoded zone: ``polys`` (:func:`as_polys`, every ring closed
-    once here so the ray-cast, the fan triangles and the areas all see
-    the closing edge), ``env`` (xmin, ymin, xmax, ymax) and ``is_rect``
-    (:func:`is_rectangle` on the payload as decoded).  The clip kernels'
-    fan triangles and rectilinear cover are derived on first use and
-    kept in the same entry."""
+    """One decoded zone: ``polys`` (:func:`closed_polys`), ``env``
+    (xmin, ymin, xmax, ymax) and ``is_rect`` (:func:`is_rectangle` on
+    the payload as decoded).  The clip kernels' fan triangles and
+    rectilinear cover are derived on first use and kept in the same
+    entry."""
 
     def __init__(self, typ: str, payload):
-        self.polys = [[_closed(r) for r in poly] for poly in as_polys(typ, payload)]
+        self.polys = closed_polys(typ, payload)
         self.env = _rings_envelope([r for poly in self.polys for r in poly])
         self.is_rect = is_rectangle(typ, payload)
 

@@ -63,14 +63,13 @@ def points_in_polygon(
 
 
 def points_in_polygon_wkt(xs, ys, wkt: str) -> np.ndarray:
+    from gdal_spark.geometry.envelope import closed_polys
     from gdal_spark.geometry.wkt import parse_wkt
 
     typ, payload = parse_wkt(wkt)
-    if typ == "POLYGON":
-        return points_in_polygon(xs, ys, payload)
-    if typ == "MULTIPOLYGON":
-        inside = np.zeros(np.asarray(xs).shape[0], dtype=bool)
-        for poly in payload:
-            inside |= points_in_polygon(xs, ys, poly)
-        return inside
-    raise ValueError(f"PIP needs polygonal WKT, got {typ}")
+    if typ not in ("POLYGON", "MULTIPOLYGON"):
+        raise ValueError(f"PIP needs polygonal WKT, got {typ}")
+    inside = np.zeros(np.asarray(xs).shape[0], dtype=bool)
+    for poly in closed_polys(typ, payload):
+        inside |= points_in_polygon(xs, ys, poly)
+    return inside

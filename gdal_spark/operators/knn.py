@@ -1,33 +1,43 @@
-"""kNN feature lookup — cell-ring expansion + vectorized top-k.
+"""kNN feature lookup and fixed-radius join on a broadcast STR tree.
 
 Re-answers the reference's quadtree radius search used by the gridding
 operators (alg/gdalgrid.cpp:241-330 GDALGridInverseDistanceToAPower...
 search via CPLQuadTreeSearch at :276, nearest-neighbor variant :879):
-grow the search region ring-by-ring around the query point until the
-k-th nearest candidate is provably closer than anything outside.
+grow the search region around the query point until the k-th nearest
+candidate is provably closer than anything outside.
 
 Spark-first shape: the target layer (a dim table, like the reference's
-in-memory quadtree) is collected once per call (the bounded
-``operators/dim.py`` ``collect_dim``; the ``*_shuffle`` twins never
-collect), bucketed into a uniform degree grid and shipped once per
-executor inside a mapInPandas closure; the doc corpus streams
-through in Arrow batches with ZERO shuffle — the output is produced
-map-side, partition-parallel.  Distance metric: squared euclidean in
-degrees (IEEE-exact, so the DuckDB brute-force oracle agrees bit-for-bit
-on ordering); ties break by min target_id (deterministic analog of the
-reference's iteration order, SURVEY §7 watch-list).
+in-memory quadtree) comes through ``operators/dim.py`` like every
+broadcast join's dim side — one bounded driver collect, one keyed
+broadcast, one packed STR tree per executor process (the tree the
+STR-tree joins query).  The doc side crosses into Python as its
+``(lon, lat)`` columns only, in one scalar Arrow UDF that returns an
+``array<struct<...>>`` of matches per doc; the JVM expands it with
+``inline_outer``, so every other doc column, ``spans`` included, stays
+in the JVM.  Zero shuffle, zero join operator.
+
+* :func:`knn_join` — radius doubling: each unsettled doc asks the tree
+  for the targets inside a closed box ±r, and settles once its k-th
+  best candidate is strictly under r² (anything outside the box is at
+  least r away) or the box holds the whole layer;
+* :func:`radius_join` — one box query of ±r, then the exact
+  ``d2 < r²`` (or ``<=``) test.
+
+Distance metric: squared euclidean in degrees, ``dx*dx + dy*dy`` in the
+DuckDB oracle's op order (IEEE-exact, so the brute-force oracle agrees
+bit-for-bit on ordering); ties break by min target_id (SURVEY §7
+watch-list).  The ``*_shuffle`` twins never collect the targets: they
+join on a degree-grid cell key, for target layers past the bound.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gdal_spark.operators.dim import collect_dim
+from gdal_spark.operators.dim import _broadcast_dim, _tree_of
 
 # ------------------------------------------------------------------ targets
 N_TARGETS = 2000
@@ -51,160 +61,191 @@ def knn_targets(spark: SparkSession, n: int = N_TARGETS) -> DataFrame:
     )
 
 
-# ----------------------------------------------------------------- operator
-CELL_DEG = 4.0  # degree-grid cell size for the ring index
+# ------------------------------------------------- broadcast tree engine
+# seed half-width (degrees) of knn_join's doubling box: about the mean
+# spacing of the 2000-target layer, so most docs settle in one or two
+# rounds; the stop rule, not this guess, carries correctness
+_KNN_R0 = 4.0
 
 
-def _collect_targets(targets: DataFrame, twin: str):
-    """(tlon, tlat, target_id) arrays of the bounded dim-layer collect."""
-    t = collect_dim(targets.select("target_id", "tlon", "tlat"), "target layer",
-                    f"{twin}, which never collects the targets")
-    return (t["tlon"].to_numpy(np.float64), t["tlat"].to_numpy(np.float64),
-            t["target_id"].to_numpy(np.int64))
-
-
-def _build_buckets(tlon: np.ndarray, tlat: np.ndarray, cell: float):
-    cx = np.floor(tlon / cell).astype(np.int64)
-    cy = np.floor(tlat / cell).astype(np.int64)
-    buckets: dict[tuple[int, int], np.ndarray] = {}
-    order = np.lexsort((cy, cx))
-    cx_s, cy_s = cx[order], cy[order]
-    starts = np.flatnonzero(
-        np.r_[True, (cx_s[1:] != cx_s[:-1]) | (cy_s[1:] != cy_s[:-1])]
+def _broadcast_targets(targets: DataFrame, twin: str):
+    """The target layer as a :func:`_broadcast_dim` of (target_id, tlon,
+    tlat).  A target without finite coordinates is nobody's neighbour:
+    the JVM drops it (Spark orders NaN above +inf; NULL fails every
+    comparison), so the tree holds finite boxes only."""
+    t = targets.select(
+        "target_id", *(F.col(c).cast("double").alias(c) for c in ("tlon", "tlat"))
     )
-    ends = np.r_[starts[1:], len(order)]
-    for s, e in zip(starts, ends):
-        buckets[(int(cx_s[s]), int(cy_s[s]))] = order[s:e]
-    return buckets
+    finite = (F.abs("tlon") < float("inf")) & (F.abs("tlat") < float("inf"))
+    return _broadcast_dim(t.where(finite), "target layer", twin)
 
 
-def _ring_cells(cx: int, cy: int, r: int):
-    if r == 0:
-        return [(cx, cy)]
-    cells = []
-    for dx in range(-r, r + 1):
-        cells.append((cx + dx, cy - r))
-        cells.append((cx + dx, cy + r))
-    for dy in range(-r + 1, r):
-        cells.append((cx - r, cy + dy))
-        cells.append((cx + r, cy + dy))
-    return cells
+def _point_boxes(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    return np.column_stack([x, y, x, y])
 
 
-def _knn_group(qx, qy, qidx, cx, cy, buckets, tlon, tlat, tid, k, max_ring):
-    """kNN for a group of query points sharing grid cell (cx, cy).
-    Returns (query_row_indices, target_ids, ranks) arrays."""
-    m = len(qx)
-    cand: list[np.ndarray] = []
-    best_d2 = np.full((m, k), np.inf)
-    best_id = np.full((m, k), -1, dtype=np.int64)
+def _boxes(qx: np.ndarray, qy: np.ndarray, r: float) -> np.ndarray:
+    """Closed boxes ±r around each query, each side padded above the
+    rounding of ``q ± r``: the box holds every point whose exact offset
+    from the query is at most r on both axes.  Candidates only — the
+    exact d2 test decides."""
+    hx = r + 1e-12 * (np.abs(qx) + r)
+    hy = r + 1e-12 * (np.abs(qy) + r)
+    return np.column_stack([qx - hx, qy - hy, qx + hx, qy + hy])
 
-    def refresh(cand_idx):
-        nonlocal best_d2, best_id
-        if cand_idx.size == 0:
-            return
-        dx = qx[:, None] - tlon[cand_idx][None, :]
-        dy = qy[:, None] - tlat[cand_idx][None, :]
+
+def _knn(qx, qy, tree, tid, tlon, tlat, k: int, r0: float):
+    """The ``min(k, n_targets)`` nearest targets of each query by
+    (d2, target_id), as (m, kk) arrays of target rows (-1: none) and d2.
+    A query without finite coordinates gets none."""
+    m, kk = len(qx), min(k, len(tid))
+    best = np.full((m, max(kk, 0)), -1, dtype=np.int64)
+    best_d2 = np.full(best.shape, np.inf)
+    active = np.flatnonzero(np.isfinite(qx) & np.isfinite(qy))
+    r = float(r0)
+    while active.size and kk > 0:
+        ax, ay = qx[active], qy[active]
+        qi, ti = tree.query_boxes(_boxes(ax, ay, r))
+        dx = ax[qi] - tlon[ti]
+        dy = ay[qi] - tlat[ti]
         d2 = dx * dx + dy * dy
-        # merge with current best: concat then select k smallest by (d2, id)
-        all_d2 = np.concatenate([best_d2, d2], axis=1)
-        all_id = np.concatenate(
-            [best_id, np.broadcast_to(tid[cand_idx], (m, cand_idx.size))], axis=1
-        )
-        # lexsort per row: primary d2, secondary id
-        ordr = np.lexsort((all_id, all_d2), axis=1)[:, :k]
-        best_d2 = np.take_along_axis(all_d2, ordr, axis=1)
-        best_id = np.take_along_axis(all_id, ordr, axis=1)
+        # per-query order by (d2, target_id): one lexsort over the
+        # candidate pairs, rank within the query by position
+        order = np.lexsort((tid[ti], d2, qi))
+        qi, ti, d2 = qi[order], ti[order], d2[order]
+        starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
+        counts = np.diff(np.r_[starts, len(qi)])
+        kth = np.full(len(starts), np.inf)
+        has_k = counts >= kk
+        kth[has_k] = d2[starts[has_k] + kk - 1]
+        # a target outside the box is at least r away on some axis, so
+        # its d2 >= r*r (rounding is monotone): a k-th best strictly
+        # under r*r is final, and so is a box holding the whole layer
+        settled = has_k & ((kth < r * r) | (counts == len(tid)))
+        rank = np.arange(len(qi)) - np.repeat(starts, counts)
+        take = np.repeat(settled, counts) & (rank < kk)
+        rows = active[qi[take]]
+        best[rows, rank[take]] = ti[take]
+        best_d2[rows, rank[take]] = d2[take]
+        done = np.zeros(active.size, dtype=bool)
+        done[qi[starts[settled]]] = True
+        active = active[~done]
+        r *= 2.0
+    return best, best_d2
 
-    for r in range(max_ring + 1):
-        new = [buckets[c] for c in _ring_cells(cx, cy, r) if c in buckets]
-        if new:
-            refresh(np.concatenate(new))
-        # stop when the kth best (worst row) beats the closest possible
-        # point in the NEXT unexplored ring: ring r+1 is at least
-        # r*CELL_DEG away from any point in the center cell
-        if r >= 1:
-            worst_kth = best_d2[:, k - 1].max()
-            ring_min = (r * CELL_DEG) ** 2
-            if worst_kth < ring_min:
-                break
 
-    valid = best_id >= 0
-    ranks = np.broadcast_to(np.arange(1, k + 1), (m, k))
-    rows = np.broadcast_to(qidx[:, None], (m, k))
-    return rows[valid], best_id[valid], ranks[valid], best_d2[valid]
+def _lists(counts: np.ndarray, **fields: np.ndarray) -> pa.Array:
+    """One Arrow list of structs per query: ``counts[i]`` consecutive
+    entries of the ``fields`` columns."""
+    offsets = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(counts, out=offsets[1:])
+    values = pa.StructArray.from_arrays(
+        [pa.array(v) for v in fields.values()], names=list(fields)
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets), values)
+
+
+def _expand(docs: DataFrame, matches, lon_col: str, lat_col: str) -> DataFrame:
+    """docs.* ⊕ the struct fields of ``matches(lon, lat)``, one row per
+    match.  ``inline_outer``, not ``inline``: for ``inline`` Spark infers
+    a ``size(..) > 0`` filter under the Generate, and that filter runs
+    the UDF a second time; the null row of a doc without matches is
+    dropped after the Generate instead."""
+    nn = matches(F.col(lon_col).cast("double"), F.col(lat_col).cast("double"))
+    return docs.select("*", F.inline_outer(nn)).where(F.col("target_id").isNotNull())
 
 
 def knn_join(
     docs: DataFrame,
     targets: DataFrame,
     k: int = 5,
-    cell_deg: float = CELL_DEG,
     lon_col: str = "lon",
     lat_col: str = "lat",
 ) -> DataFrame:
-    """For each doc, its k nearest targets: (doc columns..., target_id, rnk).
+    """For each doc, its k nearest targets: (doc columns..., target_id,
+    rnk, d2), rnk 1..k by (d2, target_id).
 
-    Map-side only: targets are collected (dim-table contract, like the
-    reference's in-memory quadtree) and bucketed per executor; docs never
-    shuffle.
-    """
-    tlon, tlat, tid = _collect_targets(targets, "knn_join_shuffle")
-    max_ring = int(np.ceil(360.0 / cell_deg))  # full-world fallback bound
+    Map-side only: the targets are a dim layer (like the reference's
+    in-memory quadtree), one STR tree per executor; docs never shuffle."""
+    bc = _broadcast_targets(
+        targets, "knn_join_shuffle, the cell-ring join that never collects them"
+    )
+    r0 = _KNN_R0
 
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
+    @F.arrow_udf("array<struct<target_id:bigint,rnk:int,d2:double>>")
+    def nearest(lon: pa.Array, lat: pa.Array) -> pa.Array:
+        tree, tid, tlon, tlat = _tree_of(bc, _point_boxes)
+        qx, qy = lon.to_numpy(zero_copy_only=False), lat.to_numpy(zero_copy_only=False)
+        best, d2 = _knn(qx, qy, tree, tid, tlon, tlat, k, r0)
+        valid = best >= 0
+        return _lists(
+            valid.sum(axis=1),
+            target_id=tid[best[valid]],
+            rnk=(np.nonzero(valid)[1] + 1).astype(np.int32),
+            d2=d2[valid],
+        )
+
+    return _expand(docs, nearest, lon_col, lat_col)
+
+
+def radius_join(
+    docs: DataFrame,
+    targets: DataFrame,
+    radius2_sql: str | float,
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+    inclusive: bool = False,
+) -> DataFrame:
+    """All (doc, target) pairs with squared distance < radius² —
+    (doc columns..., target_id, d2) — the fixed-radius variant of the
+    quadtree search (GDALGridMovingAverage's search circle,
+    alg/gdalgrid.cpp:644).  Same map-side shape as :func:`knn_join`:
+    one box query of the target tree per doc, then the exact test.
+
+    ``inclusive=True`` keeps pairs with d2 == radius² — the invdistnn
+    search test is ``dfR2 <= dfRPower2`` (alg/gdalgrid.cpp:295) while
+    the moving-average one is strict."""
+    radius2 = float(radius2_sql)
+    radius = float(np.sqrt(radius2))
+    bc = _broadcast_targets(
+        targets, "radius_join_shuffle, the cell-ring join that never collects them"
     )
 
-    out_schema = StructType(
-        list(docs.schema.fields)
-        + [
-            StructField("target_id", LongType()),
-            StructField("rnk", IntegerType()),
-            StructField("d2", DoubleType()),
-        ]
+    @F.arrow_udf("array<struct<target_id:bigint,d2:double>>")
+    def within(lon: pa.Array, lat: pa.Array) -> pa.Array:
+        tree, tid, tlon, tlat = _tree_of(bc, _point_boxes)
+        qx, qy = lon.to_numpy(zero_copy_only=False), lat.to_numpy(zero_copy_only=False)
+        qi, ti = tree.query_boxes(_boxes(qx, qy, radius))
+        dx = qx[qi] - tlon[ti]
+        dy = qy[qi] - tlat[ti]
+        d2 = dx * dx + dy * dy
+        hit = d2 <= radius2 if inclusive else d2 < radius2
+        return _lists(
+            np.bincount(qi[hit], minlength=len(qx)),
+            target_id=tid[ti[hit]],
+            d2=d2[hit],
+        )
+
+    return _expand(docs, within, lon_col, lat_col)
+
+
+# ------------------------------------------------------- shuffle twins
+CELL_DEG = 4.0  # degree-grid cell size of the twins' cell key
+
+
+def _d2_sql(lon_col: str, lat_col: str) -> str:
+    """d2 in the JVM, in the broadcast kernels' and the oracle's op order."""
+    return (f"(({lon_col} - tlon) * ({lon_col} - tlon)"
+            f" + ({lat_col} - tlat) * ({lat_col} - tlat))")
+
+
+def _cell_targets(targets: DataFrame, cell_deg: float) -> DataFrame:
+    """The targets keyed on their degree-grid cell (_tcx, _tcy)."""
+    return targets.select(
+        "target_id", "tlon", "tlat",
+        F.expr(f"CAST(floor(tlon / {cell_deg!r}) AS BIGINT)").alias("_tcx"),
+        F.expr(f"CAST(floor(tlat / {cell_deg!r}) AS BIGINT)").alias("_tcy"),
     )
-    doc_cols = [f.name for f in docs.schema.fields]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buckets = _build_buckets(tlon, tlat, cell_deg)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qx = pdf[lon_col].to_numpy(np.float64)
-            qy = pdf[lat_col].to_numpy(np.float64)
-            cx = np.floor(qx / cell_deg).astype(np.int64)
-            cy = np.floor(qy / cell_deg).astype(np.int64)
-            rows_l, ids_l, rnk_l, d2_l = [], [], [], []
-            order = np.lexsort((cy, cx))
-            cxs, cys = cx[order], cy[order]
-            starts = np.flatnonzero(
-                np.r_[True, (cxs[1:] != cxs[:-1]) | (cys[1:] != cys[:-1])]
-            )
-            ends = np.r_[starts[1:], len(order)]
-            for s, e in zip(starts, ends):
-                gi = order[s:e]
-                r_rows, r_ids, r_rnk, r_d2 = _knn_group(
-                    qx[gi], qy[gi], gi, int(cxs[s]), int(cys[s]),
-                    buckets, tlon, tlat, tid, k, max_ring,
-                )
-                rows_l.append(r_rows)
-                ids_l.append(r_ids)
-                rnk_l.append(r_rnk)
-                d2_l.append(r_d2)
-            rows = np.concatenate(rows_l)
-            out = pdf.iloc[rows].reset_index(drop=True)
-            out = out[doc_cols].copy()
-            out["target_id"] = np.concatenate(ids_l)
-            out["rnk"] = np.concatenate(rnk_l).astype(np.int32)
-            out["d2"] = np.concatenate(d2_l)
-            yield out
-
-    return docs.mapInPandas(kernel, out_schema)
 
 
 def knn_join_shuffle(
@@ -220,9 +261,9 @@ def knn_join_shuffle(
     """Shuffle-strategy kNN for target tables BEYOND broadcast/driver
     size: no driver collect anywhere.
 
-    Iterative ring doubling (the distributed analog of the map-side
-    kernel's adaptive quadtree search, and of GDALGridNearestNeighbor's
-    growing search radius, alg/gdalgrid.cpp:241-330):
+    Iterative ring doubling (the distributed analog of knn_join's
+    radius doubling, and of GDALGridNearestNeighbor's growing search
+    radius, alg/gdalgrid.cpp:241-330):
 
       1. docs and targets both carry JVM cell keys (floor(coord/cell));
       2. round r joins the still-pending docs' NEW ring band
@@ -239,21 +280,14 @@ def knn_join_shuffle(
     Tie-break (d2, target_id) matches knn_join bit-for-bit: d2 uses the
     same (dx*dx + dy*dy) op order JVM-side."""
     world_r = int(np.ceil(360.0 / cell_deg))
-    d2_expr = (
-        f"(({lon_col} - tlon) * ({lon_col} - tlon)"
-        f" + ({lat_col} - tlat) * ({lat_col} - tlat))"
-    )
+    d2_expr = _d2_sql(lon_col, lat_col)
     doc_cols = [f.name for f in docs.schema.fields]
     dd = docs.withColumn(
         "_qcx", F.expr(f"CAST(floor({lon_col} / {cell_deg!r}) AS BIGINT)")
     ).withColumn(
         "_qcy", F.expr(f"CAST(floor({lat_col} / {cell_deg!r}) AS BIGINT)")
     )
-    tt = targets.select(
-        "target_id", "tlon", "tlat",
-        F.expr(f"CAST(floor(tlon / {cell_deg!r}) AS BIGINT)").alias("_tcx"),
-        F.expr(f"CAST(floor(tlat / {cell_deg!r}) AS BIGINT)").alias("_tcy"),
-    )
+    tt = _cell_targets(targets, cell_deg)
     pending = dd
     acc = None
     r_prev, radius = -1, 1
@@ -325,15 +359,12 @@ def radius_join_shuffle(
     """Shuffle-strategy fixed-radius join (huge-target-table path, no
     driver collect): docs explode to every cell within ceil(r/cell)+1
     Chebyshev rings (JVM sequence explode), one shuffled equi-join on
-    the cell key, exact d2 filter with the same op order as the
-    map-side kernel."""
+    the cell key, exact d2 filter with the same op order as
+    radius_join."""
     radius2 = float(radius2_sql)
     rmax = int(np.ceil(float(np.sqrt(radius2)) / cell_deg)) + 1
     doc_cols = [f.name for f in docs.schema.fields]
-    d2_expr = (
-        f"(({lon_col} - tlon) * ({lon_col} - tlon)"
-        f" + ({lat_col} - tlat) * ({lat_col} - tlat))"
-    )
+    d2_expr = _d2_sql(lon_col, lat_col)
     band = (
         docs.withColumn("_dx", F.explode(F.sequence(F.lit(-rmax), F.lit(rmax))))
         .withColumn("_dy", F.explode(F.sequence(F.lit(-rmax), F.lit(rmax))))
@@ -349,92 +380,10 @@ def radius_join_shuffle(
         )
         .select(*doc_cols, "_jcx", "_jcy")
     )
-    tt = targets.select(
-        "target_id", "tlon", "tlat",
-        F.expr(f"CAST(floor(tlon / {cell_deg!r}) AS BIGINT)").alias("_tcx"),
-        F.expr(f"CAST(floor(tlat / {cell_deg!r}) AS BIGINT)").alias("_tcy"),
-    )
+    tt = _cell_targets(targets, cell_deg)
     return (
         band.join(tt, (band._jcx == tt._tcx) & (band._jcy == tt._tcy))
         .withColumn("d2", F.expr(d2_expr))
         .filter(F.col("d2") < radius2)
         .select(*doc_cols, "target_id", "d2")
     )
-
-
-def radius_join(
-    docs: DataFrame,
-    targets: DataFrame,
-    radius2_sql: str | float,
-    cell_deg: float = CELL_DEG,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    inclusive: bool = False,
-) -> DataFrame:
-    """All (doc, target) pairs with squared distance < radius² — the
-    fixed-radius variant of the quadtree search (GDALGridMovingAverage's
-    search circle, alg/gdalgrid.cpp:644).  Same map-side shape as
-    knn_join: bucketed targets per executor, docs never shuffle; each
-    query group only scans buckets within ceil(r/cell)+1 cells.
-
-    ``inclusive=True`` keeps pairs with d2 == radius² — the invdistnn
-    search test is ``dfR2 <= dfRPower2`` (alg/gdalgrid.cpp:295) while
-    the moving-average one is strict."""
-    radius2 = float(radius2_sql)
-    radius = float(np.sqrt(radius2))
-    rmax = int(np.ceil(radius / cell_deg)) + 1
-    tlon, tlat, tid = _collect_targets(targets, "radius_join_shuffle")
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(docs.schema.fields)
-        + [StructField("target_id", LongType()), StructField("d2", DoubleType())]
-    )
-    doc_cols = [f.name for f in docs.schema.fields]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buckets = _build_buckets(tlon, tlat, cell_deg)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qx = pdf[lon_col].to_numpy(np.float64)
-            qy = pdf[lat_col].to_numpy(np.float64)
-            cx = np.floor(qx / cell_deg).astype(np.int64)
-            cy = np.floor(qy / cell_deg).astype(np.int64)
-            order = np.lexsort((cy, cx))
-            cxs, cys = cx[order], cy[order]
-            starts = np.flatnonzero(
-                np.r_[True, (cxs[1:] != cxs[:-1]) | (cys[1:] != cys[:-1])]
-            )
-            ends = np.r_[starts[1:], len(order)]
-            rows_l, ids_l, d2_l = [], [], []
-            for s, e in zip(starts, ends):
-                gi = order[s:e]
-                cand = [
-                    buckets[c]
-                    for dx in range(-rmax, rmax + 1)
-                    for dy in range(-rmax, rmax + 1)
-                    if (c := (int(cxs[s]) + dx, int(cys[s]) + dy)) in buckets
-                ]
-                if not cand:
-                    continue
-                ci = np.concatenate(cand)
-                ddx = qx[gi][:, None] - tlon[ci][None, :]
-                ddy = qy[gi][:, None] - tlat[ci][None, :]
-                d2 = ddx * ddx + ddy * ddy
-                hit_r, hit_c = np.nonzero(
-                    d2 <= radius2 if inclusive else d2 < radius2
-                )
-                rows_l.append(gi[hit_r])
-                ids_l.append(tid[ci][hit_c])
-                d2_l.append(d2[hit_r, hit_c])
-            if not rows_l:
-                continue
-            rows = np.concatenate(rows_l)
-            out = pdf.iloc[rows].reset_index(drop=True)[doc_cols].copy()
-            out["target_id"] = np.concatenate(ids_l)
-            out["d2"] = np.concatenate(d2_l)
-            yield out
-
-    return docs.mapInPandas(kernel, out_schema)

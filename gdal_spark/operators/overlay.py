@@ -62,7 +62,7 @@ from gdal_spark.geometry.boolean import (
     polys_pair_intersection_area,
     rects_polys_intersection_area,
 )
-from gdal_spark.geometry.envelope import ZoneGeometry, as_polys, zone_geometry
+from gdal_spark.geometry.envelope import ZoneGeometry, closed_polys, zone_geometry
 from gdal_spark.geometry.wkt import _fmt, parse_wkt
 from gdal_spark.operators.pip_join import _zone_cells
 
@@ -180,7 +180,7 @@ def _clip_kernel(
                 z = zone_geometry(g, geom_format)
                 if doc_wkt_col is not None:
                     for r in rows:  # pytest-scale path: WKT x WKT pairs
-                        dpolys = as_polys(*parse_wkt(pdf[doc_wkt_col].iat[r]))
+                        dpolys = closed_polys(*parse_wkt(pdf[doc_wkt_col].iat[r]))
                         areas[r] = polys_pair_intersection_area(dpolys, z.polys)
                     continue
                 env = (xmin[rows], ymin[rows], xmax[rows], ymax[rows])
@@ -220,7 +220,7 @@ def _lowdim_kernel(zone_wkt_col: str, doc_wkt_col: str | None):
             for i in range(len(pdf)):
                 zpolys = zone_geometry(pdf[zone_wkt_col].iat[i], "wkt").polys
                 if doc_wkt_col is not None:
-                    dpolys = as_polys(*parse_wkt(pdf[doc_wkt_col].iat[i]))
+                    dpolys = closed_polys(*parse_wkt(pdf[doc_wkt_col].iat[i]))
                 else:
                     x0, y0 = pdf["xmin"].iat[i], pdf["ymin"].iat[i]
                     x1, y1 = pdf["xmax"].iat[i], pdf["ymax"].iat[i]

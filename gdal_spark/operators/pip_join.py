@@ -55,22 +55,36 @@ from gdal_spark.operators.dim import collect_dim
 DEFAULT_ZOOM = 6  # ~5.6° cells at equator; zone envelopes span O(10) cells
 
 
-def _cover_cells(env, zoom):
-    """All (tx, ty) mercator cells intersecting an envelope (lon/lat)."""
-    xmin, ymin, xmax, ymax = env
-    # clamp to mercator domain
-    ymin = max(ymin, -85.05)
-    ymax = min(ymax, 85.05)
-    xmin = max(xmin, -179.999999)
-    xmax = min(xmax, 179.999999)
-    tx0, ty0 = (int(v) for v in mercator.lat_lon_to_tile(ymin, xmin, zoom))
-    tx1, ty1 = (int(v) for v in mercator.lat_lon_to_tile(ymax, xmax, zoom))
+def _cover_cells(env: np.ndarray, zoom: int):
+    """Every (zone, tx, ty) mercator cell intersecting the zone
+    envelopes ``env`` (N x 4, lon/lat), in one vectorized pass: the
+    tile range of each clamped envelope, then one row per cell."""
     n = 2**zoom
-    return [
-        (tx, ty)
-        for tx in range(max(tx0, 0), min(tx1, n - 1) + 1)
-        for ty in range(max(ty0, 0), min(ty1, n - 1) + 1)
-    ]
+    # clamp to mercator domain
+    x0 = np.maximum(env[:, 0], -179.999999)
+    y0 = np.maximum(env[:, 1], -85.05)
+    x1 = np.minimum(env[:, 2], 179.999999)
+    y1 = np.minimum(env[:, 3], 85.05)
+    tx0, ty0 = (np.maximum(t, 0) for t in mercator.lat_lon_to_tile(y0, x0, zoom))
+    tx1, ty1 = (np.minimum(t, n - 1) for t in mercator.lat_lon_to_tile(y1, x1, zoom))
+    nx = np.maximum(tx1 - tx0 + 1, 0)
+    ny = np.maximum(ty1 - ty0 + 1, 0)
+    zi = np.repeat(np.arange(len(env)), nx * ny)
+    local = np.arange(len(zi)) - np.repeat(np.cumsum(nx * ny) - nx * ny, nx * ny)
+    return zi, (tx0[zi] + local // ny[zi], ty0[zi] + local % ny[zi])
+
+
+def _per_envelope(cover, n_keys: int):
+    """The (zone, keys) shape of :func:`_cover_cells` for a cover that
+    lists one envelope's ``n_keys``-tuples at a time."""
+
+    def cover_all(env: np.ndarray, zoom: int):
+        cells = [cover(e, zoom) for e in env]
+        zi = np.repeat(np.arange(len(env)), [len(c) for c in cells])
+        keys = np.asarray([k for c in cells for k in c], dtype=np.int64)
+        return zi, keys.reshape(-1, n_keys).T
+
+    return cover_all
 
 
 _ENV = ("env_xmin", "env_ymin", "env_xmax", "env_ymax")
@@ -80,16 +94,18 @@ def _cover(pdf: pd.DataFrame, index: str, zoom: int, wkt_col: str, geom_format: 
     """One row per (zone, covering cell of ``index``): the zone's columns,
     the cell keys, the envelope for the JVM prefilter and ``is_rect``
     (``IsRectangle``, ogrgeometry.cpp:8822, routing rectangles to the
-    envelope-only refine).  Each zone is decoded once."""
+    envelope-only refine).  Each zone is decoded once, then the index
+    covers every envelope in one call."""
     keys, cover, _ = _INDEXES[index]
-    rows = []
-    for i, g in enumerate(pdf[wkt_col]):
-        z = ZoneGeometry(*decode(g, geom_format))
-        rows.extend((i, *cell, *z.env, z.is_rect) for cell in cover(z.env, zoom))
-    extra = pd.DataFrame(rows, columns=["_i", *keys, *_ENV, "is_rect"])
-    out = pdf.iloc[extra["_i"].to_numpy(dtype=np.int64)].reset_index(drop=True)
-    for c in extra.columns[1:]:
-        out[c] = extra[c].to_numpy()
+    geoms = [ZoneGeometry(*decode(g, geom_format)) for g in pdf[wkt_col]]
+    env = np.array([z.env for z in geoms], dtype=np.float64).reshape(-1, 4)
+    zi, cells = cover(env, zoom)
+    out = pdf.iloc[zi].reset_index(drop=True)
+    for k, v in zip(keys, cells):
+        out[k] = np.asarray(v, dtype=np.int64)
+    for j, c in enumerate(_ENV):
+        out[c] = env[zi, j]
+    out["is_rect"] = np.array([z.is_rect for z in geoms], dtype=bool)[zi]
     return out
 
 
@@ -299,12 +315,12 @@ _INDEXES = {
     "mercator": (("cell_tx", "cell_ty"), _cover_cells, with_point_cell),
     "s2": (
         ("cell_s2",),
-        _s2_cover,
+        _per_envelope(_s2_cover, 1),
         lambda points, zoom: with_point_cell_s2(points),
     ),
     "hex": (
         ("hex_q", "hex_r"),
-        lambda env, zoom: hex_cover_rect(*env),
+        _per_envelope(lambda env, zoom: hex_cover_rect(*env), 2),
         lambda points, zoom: with_point_cell_hex(points),
     ),
 }

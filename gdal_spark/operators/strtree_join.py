@@ -17,18 +17,19 @@ When to prefer which at 100 TB:
     into thousands of cells or makes hot cells with many candidates;
     the R-tree adapts to feature size with no zoom knob.
 
-Zone-layer contract: dim-sized.  All three joins collect their dim
-layer through the one bounded driver collect every broadcast join uses
-(``operators/dim.py`` ``collect_dim``, at most ``MAX_DIM_ROWS`` rows,
-raising above that with a pointer to the distributed twin, where one
-exists — the clip join has none) and ship it
-as a keyed broadcast (:func:`_broadcast_dim`); one tree per executor
-process is built through :func:`_tree_of`.  Exactness: candidates are
-envelope hits; every candidate goes through the SAME per-unique-zone
-kernels as the cell joins — zones decoded by the shared
-``zone_geometry`` cache, the ray-cast of pip_join's refine, the clip
-areas of overlay's kernel — so results are bit-identical to the
-cell-join twins (pinned in tests/test_strtree_join.py).
+Zone-layer contract: dim-sized.  Both joins bring their zone layer
+through ``operators/dim.py``: ``_broadcast_dim`` (the bounded driver
+collect every broadcast join uses, at most ``MAX_DIM_ROWS`` rows,
+raising above that with a pointer to the distributed twin where one
+exists — the clip join has none) ships it as one keyed broadcast, and
+``_tree_of`` bulk-loads one tree per executor process; ``knn_join``
+and ``radius_join`` (operators/knn.py) query the same kind of tree over
+their targets.  Exactness: candidates are envelope hits; every
+candidate goes through the SAME per-unique-zone kernels as the cell
+joins — zones decoded by the shared ``zone_geometry`` cache, the
+ray-cast of pip_join's refine, the clip areas of overlay's kernel — so
+results are bit-identical to the cell-join twins (pinned in
+tests/test_strtree_join.py).
 """
 
 from __future__ import annotations
@@ -38,47 +39,11 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from gdal_spark.geometry.envelope import zone_geometry
 from gdal_spark.geometry.pip import points_in_polygon
-from gdal_spark.geometry.strtree import STRTree
-from gdal_spark.operators.dim import collect_dim
-
-# one tree per broadcast payload per executor process, keyed by an
-# explicit token SHIPPED IN the broadcast value — id(bc) would be the
-# executor-side unpickled object's address, which CPython reuses across
-# different broadcasts (stale-tree hazard) and differs across tasks for
-# the same broadcast (useless cache)
-_TREE_CACHE: dict[str, tuple] = {}
-_KEY_SEQ = [0]
-
-
-def _broadcast_dim(df: DataFrame, what: str, twin: str):
-    """Broadcast a dim layer as ``(key, *columns)`` (numpy arrays in
-    ``df``'s column order), collected through the bounded
-    :func:`collect_dim`; ``key`` is a driver-unique token:
-    applicationId x per-process sequence number."""
-    pdf = collect_dim(df, what, twin)
-    sc = df.sparkSession.sparkContext
-    _KEY_SEQ[0] += 1
-    key = f"{sc.applicationId}/{_KEY_SEQ[0]}"
-    return sc.broadcast((key, *(pdf[c].to_numpy() for c in pdf.columns)))
-
-
-def _tree_of(bc, boxes_of) -> tuple:
-    """(STRTree, ids, *columns) of a :func:`_broadcast_dim` layer whose
-    first column is the id; the tree is bulk-loaded from
-    ``boxes_of(*columns)`` once per executor process."""
-    key, ids, *cols = bc.value
-    got = _TREE_CACHE.get(key)
-    if got is None:
-        _TREE_CACHE.clear()  # one live method layer per process is plenty
-        got = (STRTree(boxes_of(*cols)), np.asarray(ids, dtype=np.int64), *cols)
-        _TREE_CACHE[key] = got
-    return got
-
+from gdal_spark.operators.dim import _broadcast_dim, _tree_of
 
 def _zone_boxes(wkts) -> np.ndarray:
     return np.asarray([zone_geometry(w, "wkt").env for w in wkts], dtype=np.float64)
@@ -194,111 +159,3 @@ def clip_join_strtree(
     return polydocs.select(id_col, "xmin", "ymin", "xmax", "ymax").mapInPandas(
         kernel, out_schema
     )
-
-
-# a box radius covering the whole lon/lat extent: the candidate set is
-# provably complete at this radius, so the doubling loop must terminate
-_KNN_WORLD_R = 512.0
-
-
-def knn_join_strtree(
-    docs: DataFrame,
-    targets: DataFrame,
-    k: int = 5,
-    r0: float = 4.0,
-    id_col: str = "doc_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """kNN twin backed by the per-executor STR tree (same dim-layer
-    contract and the same exact semantics as knn_join: squared
-    euclidean in degrees, ties by min target_id, rnk 1..k).
-
-    Radius-doubling candidate stage: each still-active query point asks
-    the tree for targets inside the closed box ±r; a point settles when
-    its k-th best candidate distance satisfies d2 <= r² — any target
-    OUTSIDE the box has |dx| > r or |dy| > r, hence d2 strictly > r²,
-    so the top-k is provably final (the tree analog of the cell-ring
-    stop rule in knn.py:107-118).  Bit-identical to knn_join (pinned in
-    tests/test_strtree_join.py; same DuckDB brute-force oracle)."""
-    bc = _broadcast_dim(
-        targets.select(
-            "target_id", *(F.col(c).cast("double").alias(c) for c in ("tlon", "tlat"))
-        ),
-        "target layer",
-        "knn_join_shuffle, the cell-ring join that never collects them",
-    )
-
-    from pyspark.sql.types import IntegerType
-
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("target_id", LongType()),
-            StructField("rnk", IntegerType()),
-            StructField("d2", DoubleType()),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tree, tid, tlon, tlat = _tree_of(
-            bc, lambda x, y: np.column_stack([x, y, x, y])
-        )
-        kk = min(k, len(tid))
-        if kk == 0:
-            return
-        for pdf in batches:
-            qx = pdf[lon_col].to_numpy(np.float64)
-            qy = pdf[lat_col].to_numpy(np.float64)
-            did = pdf[id_col].to_numpy(np.int64)
-            m = len(qx)
-            out_id = np.full((m, kk), -1, dtype=np.int64)
-            out_d2 = np.full((m, kk), np.inf)
-            active = np.arange(m, dtype=np.int64)
-            r = float(r0)
-            while active.size:
-                ax, ay = qx[active], qy[active]
-                qi, ti = tree.query_boxes(
-                    np.column_stack([ax - r, ay - r, ax + r, ay + r])
-                )
-                dx = ax[qi] - tlon[ti]
-                dy = ay[qi] - tlat[ti]
-                d2 = dx * dx + dy * dy
-                # per-query top-k by (d2, target_id): one lexsort over
-                # the candidate pairs, rank-within-group by cumcount
-                order = np.lexsort((tid[ti], d2, qi))
-                qi_s, ti_s, d2_s = qi[order], ti[order], d2[order]
-                starts = np.flatnonzero(np.r_[True, qi_s[1:] != qi_s[:-1]])
-                counts = np.diff(np.r_[starts, len(qi_s)])
-                ranks = np.arange(len(qi_s)) - np.repeat(starts, counts)
-                grp_of = np.repeat(np.arange(len(starts)), counts)
-                # settled: k candidates exist AND the kth is inside the
-                # provably-complete radius (or the box already covers
-                # the world extent)
-                kth_d2 = np.full(len(starts), np.inf)
-                has_k = counts >= kk
-                kth_idx = starts[has_k] + kk - 1
-                kth_d2[has_k] = d2_s[kth_idx]
-                settled_g = has_k & ((kth_d2 <= r * r) | (r >= _KNN_WORLD_R))
-                take = settled_g[grp_of] & (ranks < kk)
-                rows = active[qi_s[take]]
-                cols = ranks[take]
-                out_id[rows, cols] = ti_s[take]
-                out_d2[rows, cols] = d2_s[take]
-                done = np.zeros(active.size, dtype=bool)
-                done[qi_s[starts[settled_g]]] = True
-                active = active[~done]
-                r *= 2.0
-            valid = out_id >= 0
-            rows = np.broadcast_to(np.arange(m)[:, None], (m, kk))[valid]
-            rnks = np.broadcast_to(np.arange(1, kk + 1), (m, kk))[valid]
-            yield pd.DataFrame(
-                {
-                    id_col: did[rows],
-                    "target_id": tid[out_id[valid]],
-                    "rnk": rnks.astype(np.int32),
-                    "d2": out_d2[valid],
-                }
-            )
-
-    return docs.select(id_col, lon_col, lat_col).mapInPandas(kernel, out_schema)

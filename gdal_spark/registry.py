@@ -402,8 +402,8 @@ SELECT doc_id, target_id, CAST(rnk AS int) AS rnk FROM r WHERE rnk <= {_KNN_K}
 
 @register("knn", _KNN_ORACLE)
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k=5 nearest targets per doc via cell-ring expansion (map-side,
-    zero shuffle); ties by min target_id."""
+    """k=5 nearest targets per doc via radius doubling on the broadcast
+    target STR tree (map-side, zero shuffle); ties by min target_id."""
     from gdal_spark.operators.knn import knn_join, knn_targets
 
     docs = corpus.load_docs(spark, sf_dir).select("doc_id", "lon", "lat")
@@ -411,20 +411,13 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "target_id", "rnk")
 
 
-# STR-tree kNN twin — the third pluggable candidate stage for the kNN
-# family (cell-ring map-side / ring-band shuffle / R-tree): radius-
-# doubling closed-box tree queries with the provably-complete stop rule
-# (kth-best d2 <= r² ⇒ nothing outside the box can displace it), same
-# squared-euclidean metric and min-target_id ties, bit-identical to
-# knn_join (parity pinned in tests/test_strtree_join.py).
+# The STR-tree kNN row: knn_join itself queries the broadcast target STR
+# tree (the one tree shape of operators/dim.py), so this row runs the
+# same call as ``knn``.  It stays registered because the correctness
+# report is keyed by query name.
 @register("knn_strtree", _KNN_ORACLE)
 def q_knn_strtree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdal_spark.operators.strtree_join import knn_join_strtree
-    from gdal_spark.operators.knn import knn_targets
-
-    docs = corpus.load_docs(spark, sf_dir).select("doc_id", "lon", "lat")
-    out = knn_join_strtree(docs, knn_targets(spark), k=_KNN_K)
-    return out.select("doc_id", "target_id", "rnk")
+    return q_knn(spark, sf_dir)
 
 
 @register("knn_shuffle", _KNN_ORACLE)
@@ -2703,7 +2696,7 @@ def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Grid interpolation (alg/gdalgrid.cpp invdistnn): scattered targets ->
 # regular grid via IDW over the 12 nearest (quadtree-search analog =
-# our cell-ring kNN), power=2.
+# knn_join's target STR tree), power=2.
 # --------------------------------------------------------------------------
 _GRID_W, _GRID_H = 90, 45  # 4-degree cells
 # center offset .0005 keeps pixel centers off the target lattice (d2>0)
@@ -2711,6 +2704,18 @@ _GLON_SQL = "(-1.8e2 + gx * 4 + 2.0005e0)"
 _GLAT_SQL = "(-9.0e1 + gy * 4 + 2.0005e0)"
 _TVAL_SQL = "CAST(((target_id * 37) % 100) AS DOUBLE)"
 _IDW_K = 12
+
+
+def _grid_points(spark: SparkSession) -> DataFrame:
+    """(gx, gy, lon, lat): the pixel centers of the output grid, the
+    query points of the kNN / radius grid rows (``pc`` in their oracles)."""
+    px = spark.range(_GRID_W * _GRID_H).select(
+        (F.col("id") % _GRID_W).alias("gx"),
+        ((F.col("id") - (F.col("id") % _GRID_W)) / _GRID_W).cast("long").alias("gy"),
+    )
+    return px.select(
+        "gx", "gy", F.expr(_GLON_SQL).alias("lon"), F.expr(_GLAT_SQL).alias("lat")
+    )
 
 _IDW_ORACLE = f"""
 WITH px AS (
@@ -2741,11 +2746,7 @@ FROM r WHERE rnk <= {_IDW_K} GROUP BY gx, gy
 def q_grid_idw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.operators.knn import knn_join, knn_targets
 
-    px = spark.range(_GRID_W * _GRID_H).select(
-        (F.col("id") % _GRID_W).alias("gx"),
-        ((F.col("id") - (F.col("id") % _GRID_W)) / _GRID_W).cast("long").alias("gy"),
-    )
-    pc = px.select("gx", "gy", F.expr(_GLON_SQL).alias("lon"), F.expr(_GLAT_SQL).alias("lat"))
+    pc = _grid_points(spark)
     kn = knn_join(pc, knn_targets(spark), k=_IDW_K)
     kn = kn.withColumn("tval", F.expr(_TVAL_SQL))
     return kn.groupBy("gx", "gy").agg(
@@ -2769,13 +2770,7 @@ _IDW4_ORACLE = _IDW_ORACLE.replace(
 def q_grid_idw_pow4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.operators.knn import knn_join, knn_targets
 
-    px = spark.range(_GRID_W * _GRID_H).select(
-        (F.col("id") % _GRID_W).alias("gx"),
-        ((F.col("id") - (F.col("id") % _GRID_W)) / _GRID_W).cast("long").alias("gy"),
-    )
-    pc = px.select(
-        "gx", "gy", F.expr(_GLON_SQL).alias("lon"), F.expr(_GLAT_SQL).alias("lat")
-    )
+    pc = _grid_points(spark)
     kn = knn_join(pc, knn_targets(spark), k=_IDW_K)
     kn = kn.withColumn("tval", F.expr(_TVAL_SQL))
     d4 = F.col("d2") * F.col("d2")
@@ -2786,7 +2781,7 @@ def q_grid_idw_pow4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Grid interpolation modes beyond invdistnn (alg/gdalgrid.cpp):
-#   * nearest (GDALGridNearestNeighbor, :1038) — k=1 of the cell-ring kNN;
+#   * nearest (GDALGridNearestNeighbor, :1038) — k=1 of knn_join;
 #   * moving average (GDALGridMovingAverage, :644) — all targets within
 #     radius; emitted as (count, integer sum) so no float division rides
 #     the hash (sum of ints is order-independent-exact in doubles).
@@ -2819,11 +2814,7 @@ SELECT gx, gy, CAST(tval AS BIGINT) AS nearest_val FROM r WHERE rnk = 1
 def q_grid_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.operators.knn import knn_join, knn_targets
 
-    px = spark.range(_GRID_W * _GRID_H).select(
-        (F.col("id") % _GRID_W).alias("gx"),
-        ((F.col("id") - (F.col("id") % _GRID_W)) / _GRID_W).cast("long").alias("gy"),
-    )
-    pc = px.select("gx", "gy", F.expr(_GLON_SQL).alias("lon"), F.expr(_GLAT_SQL).alias("lat"))
+    pc = _grid_points(spark)
     kn = knn_join(pc, knn_targets(spark), k=1)
     return kn.select(
         "gx", "gy", F.expr(_TVAL_SQL).cast("long").alias("nearest_val")
@@ -2853,15 +2844,11 @@ GROUP BY pc.gx, pc.gy
 @register("grid_average", _GRID_AVG_ORACLE)
 def q_grid_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moving-average grid: targets within the radius meet cells through
-    the SAME mercator cell-ring index the kNN uses (no cross join at
-    scale) — here radius covers few cells, broadcast join on cell key."""
+    the SAME broadcast target STR tree the kNN uses (no cross join at
+    scale): one box query per cell, then the exact d2 test."""
     from gdal_spark.operators.knn import knn_targets, radius_join
 
-    px = spark.range(_GRID_W * _GRID_H).select(
-        (F.col("id") % _GRID_W).alias("gx"),
-        ((F.col("id") - (F.col("id") % _GRID_W)) / _GRID_W).cast("long").alias("gy"),
-    )
-    pc = px.select("gx", "gy", F.expr(_GLON_SQL).alias("lon"), F.expr(_GLAT_SQL).alias("lat"))
+    pc = _grid_points(spark)
     j = radius_join(pc, knn_targets(spark), radius2_sql=_GRID_AVG_RADIUS2)
     return j.groupBy("gx", "gy").agg(
         F.count("*").alias("n_pts"),
@@ -2896,11 +2883,7 @@ def q_grid_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the targets inside the search radius, per grid cell."""
     from gdal_spark.operators.knn import knn_targets, radius_join
 
-    px = spark.range(_GRID_W * _GRID_H).select(
-        (F.col("id") % _GRID_W).alias("gx"),
-        ((F.col("id") - (F.col("id") % _GRID_W)) / _GRID_W).cast("long").alias("gy"),
-    )
-    pc = px.select("gx", "gy", F.expr(_GLON_SQL).alias("lon"), F.expr(_GLAT_SQL).alias("lat"))
+    pc = _grid_points(spark)
     j = radius_join(pc, knn_targets(spark), radius2_sql=_GRID_AVG_RADIUS2)
     tv = F.expr(_TVAL_SQL).cast("long")
     return j.groupBy("gx", "gy").agg(
@@ -2962,13 +2945,7 @@ def q_grid_avg_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise mean distance among points in the search circle."""
     from gdal_spark.operators.knn import knn_targets, radius_join
 
-    px = spark.range(_GRID_W * _GRID_H).select(
-        (F.col("id") % _GRID_W).alias("gx"),
-        ((F.col("id") - (F.col("id") % _GRID_W)) / _GRID_W).cast("long").alias("gy"),
-    )
-    pc = px.select(
-        "gx", "gy", F.expr(_GLON_SQL).alias("lon"), F.expr(_GLAT_SQL).alias("lat")
-    )
+    pc = _grid_points(spark)
     t = knn_targets(spark)
     j = (
         radius_join(pc, t, radius2_sql=_GRID_AVG_RADIUS2)
@@ -3072,13 +3049,7 @@ FROM px LEFT JOIN agg ON px.gx = agg.gx AND px.gy = agg.gy
 def q_grid_invdistnn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.operators.knn import knn_targets, radius_join
 
-    px = spark.range(_GRID_W * _GRID_H).select(
-        (F.col("id") % _GRID_W).alias("gx"),
-        ((F.col("id") - (F.col("id") % _GRID_W)) / _GRID_W).cast("long").alias("gy"),
-    )
-    pc = px.select(
-        "gx", "gy", F.expr(_GLON_SQL).alias("lon"), F.expr(_GLAT_SQL).alias("lat")
-    )
+    pc = _grid_points(spark)
     j = radius_join(
         pc, knn_targets(spark), radius2_sql=_NN_R2, inclusive=True
     ).withColumn("tval", F.expr(_TVAL_SQL))
@@ -3091,7 +3062,7 @@ def q_grid_invdistnn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"CAST(sum({_NN_WQ_SQL}) AS BIGINT)").alias("sum_w"),
         F.expr(f"CAST(sum({_NN_WZQ_SQL}) AS BIGINT)").alias("sum_wz"),
     )
-    joined = px.join(agg, ["gx", "gy"], "left")
+    joined = pc.select("gx", "gy").join(agg, ["gx", "gy"], "left")
     return joined.select(
         "gx", "gy",
         F.coalesce("n_used", F.lit(0)).cast("long").alias("n_used"),
@@ -3174,13 +3145,7 @@ FROM px LEFT JOIN agg ON px.gx = agg.gx AND px.gy = agg.gy
 def q_grid_invdistnn_quadrant(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_spark.operators.knn import knn_targets, radius_join
 
-    px = spark.range(_GRID_W * _GRID_H).select(
-        (F.col("id") % _GRID_W).alias("gx"),
-        ((F.col("id") - (F.col("id") % _GRID_W)) / _GRID_W).cast("long").alias("gy"),
-    )
-    pc = px.select(
-        "gx", "gy", F.expr(_GLON_SQL).alias("lon"), F.expr(_GLAT_SQL).alias("lat")
-    )
+    pc = _grid_points(spark)
     t = knn_targets(spark)
     j = (
         radius_join(pc, t, radius2_sql=_NN_R2, inclusive=True)
@@ -3202,7 +3167,7 @@ def q_grid_invdistnn_quadrant(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"CAST(sum({_NN_WQ_SQL}) AS BIGINT)").alias("sum_w"),
         F.expr(f"CAST(sum({_NN_WZQ_SQL}) AS BIGINT)").alias("sum_wz"),
     )
-    joined = px.join(agg, ["gx", "gy"], "left")
+    joined = pc.select("gx", "gy").join(agg, ["gx", "gy"], "left")
     return joined.select(
         "gx", "gy",
         F.coalesce("n_used", F.lit(0)).cast("long").alias("n_used"),

@@ -67,12 +67,22 @@ class TestMapSideKernelsNeverShuffle:
     of a shuffle exchange implies zero executed shuffles."""
 
     def test_knn_zero_shuffle(self, spark, docs):
-        from gdal_spark.operators.knn import knn_join, knn_targets
+        # knn_join and radius_join: one scalar Arrow UDF over (lon, lat)
+        # expanded in the JVM — one Python evaluation, no exchange of
+        # any kind (the targets ride a broadcast variable), no join
+        from gdal_spark.operators.knn import knn_join, knn_targets, radius_join
 
-        df = knn_join(docs.select("doc_id", "lon", "lat"), knn_targets(spark), k=5)
-        plan = _plan(df)
-        assert _shuffles(plan) == 0, plan
-        assert "SortMergeJoin" not in plan
+        pts = docs.select("doc_id", "lon", "lat")
+        for df in (
+            knn_join(pts, knn_targets(spark), k=5),
+            radius_join(pts, knn_targets(spark), radius2_sql=25.0, inclusive=True),
+        ):
+            plan = _plan(df)
+            assert "Exchange" not in plan, plan
+            assert "Join" not in plan, plan
+            assert plan.count("ArrowEvalPython") == 1, plan
+            assert "MapInPandas" not in plan, plan
+            assert "BatchEvalPython" not in plan, plan
 
     def test_strtree_zero_shuffle_zero_join(self, spark, docs):
         from gdal_spark.operators.strtree_join import pip_join_strtree
@@ -87,17 +97,6 @@ class TestMapSideKernelsNeverShuffle:
 
         pdocs = corpus.load_polydocs(spark, sf_dir)
         df = clip_join_strtree(pdocs, zones.rich_zones(spark, n=100))
-        plan = _plan(df)
-        assert _shuffles(plan) == 0, plan
-        assert "Join" not in plan, plan
-
-    def test_knn_strtree_zero_shuffle_zero_join(self, spark, docs):
-        from gdal_spark.operators.knn import knn_targets
-        from gdal_spark.operators.strtree_join import knn_join_strtree
-
-        df = knn_join_strtree(
-            docs.select("doc_id", "lon", "lat"), knn_targets(spark), k=5
-        )
         plan = _plan(df)
         assert _shuffles(plan) == 0, plan
         assert "Join" not in plan, plan
@@ -342,11 +341,12 @@ class TestRound4fPlans:
         assert "SortMergeJoin" not in plan, plan
 
     def test_grid_invdistnn_single_python_stage(self, spark, sf_dir):
-        # radius_join's map-side kernel is the only Python stage; the
-        # pixel grid never shuffles before it (targets ride bucketed
-        # per executor)
+        # radius_join's Arrow UDF is the only Python stage; the pixel
+        # grid never shuffles before it (targets ride one broadcast
+        # STR tree per executor)
         plan = self._q(spark, sf_dir, "grid_invdistnn")
-        assert plan.count("MapInPandas") == 1, plan
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert "MapInPandas" not in plan, plan
         assert "BatchEvalPython" not in plan, plan
         assert "SortMergeJoin" not in plan, plan
 

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from gdal_spark import corpus, zones
 from gdal_spark.geometry.boolean import polys_area, rects_polys_intersection_area
 from gdal_spark.geometry.envelope import zone_geometry
-from gdal_spark.geometry.pip import points_in_polygon
+from gdal_spark.geometry.pip import points_in_polygon, points_in_polygon_wkt
 from gdal_spark.geometry.wkb import wkt_payload_to_wkb
 from gdal_spark.geometry.wkt import parse_wkt
 from gdal_spark.operators.overlay import intersection_join
@@ -92,6 +92,25 @@ class TestUnclosedRings:
 
     def test_unclosed_rectangle_keeps_its_flag(self):
         assert zone_geometry("POLYGON ((0 0,4 0,4 2,0 2))", "wkt").is_rect
+
+    def test_doc_rings_read_like_zone_rings(self, spark):
+        # the DOC side reads rings through the same closing rule: the
+        # doc-WKT clip of intersection_join and points_in_polygon_wkt
+        xs, ys = np.array([1.5]), np.array([2.0])
+        for w in ("POLYGON ((2 0,0 1,0 3,2 4))", "POLYGON ((2 0,0 1,0 3,2 4,2 0))"):
+            assert points_in_polygon_wkt(xs, ys, w)[0], w
+        square = spark.createDataFrame(
+            [(7, "POLYGON ((-1 -1,5 -1,5 5,-1 5,-1 -1))")],
+            "zone_id long, geom_wkt string",
+        )
+        for w in ("POLYGON ((0 0,2 0,2 2,1 3,0 2))", "POLYGON ((0 0,2 0,2 2,1 3,0 2,0 0))"):
+            doc = spark.createDataFrame(
+                [(0, 0.0, 0.0, 2.0, 3.0, w)],
+                "doc_id long, xmin double, ymin double, xmax double, "
+                "ymax double, doc_wkt string",
+            )
+            pieces = intersection_join(doc, square, doc_wkt_col="doc_wkt").collect()
+            assert [p.piece_area for p in pieces] == [pytest.approx(5.0)], w
 
     # every example runs Spark jobs: report a failure unshrunk
     @settings(max_examples=4, deadline=None, phases=[Phase.generate])
@@ -260,6 +279,39 @@ class TestPrepare:
         finally:
             sc.setJobGroup("", "")
         assert len(sc.statusTracker().getJobIdsForGroup("prepare-zones")) == 1
+
+    @pytest.mark.parametrize("zoom", [0, 3, 6, 10])
+    def test_mercator_cover_matches_per_envelope_tiles(self, zoom):
+        # the one-pass cover against each envelope's own tile range, on
+        # envelopes that cross the ±85.05 latitude and ±180 longitude
+        # clamps as well as ones inside them
+        from gdal_spark.geometry import mercator
+        from gdal_spark.operators.pip_join import _cover_cells
+
+        rng = np.random.default_rng(20261020 + zoom)
+        x0 = rng.uniform(-200.0, 190.0, 400)
+        y0 = rng.uniform(-89.9, 84.0, 400)
+        env = np.column_stack(
+            [x0, y0, x0 + rng.exponential(8.0, 400),
+             np.minimum(y0 + rng.exponential(5.0, 400), 89.9)]
+        )
+        n = 2**zoom
+        want = set()
+        for i, (a, b, c, d) in enumerate(env):
+            tx0, ty0 = (int(v) for v in mercator.lat_lon_to_tile(
+                max(b, -85.05), max(a, -179.999999), zoom))
+            tx1, ty1 = (int(v) for v in mercator.lat_lon_to_tile(
+                min(d, 85.05), min(c, 179.999999), zoom))
+            want.update(
+                (i, tx, ty)
+                for tx in range(max(tx0, 0), min(tx1, n - 1) + 1)
+                for ty in range(max(ty0, 0), min(ty1, n - 1) + 1)
+            )
+        zi, (tx, ty) = _cover_cells(env, zoom)
+        got = list(zip(zi.tolist(), tx.tolist(), ty.tolist()))
+        assert len(got) == len(set(got)) and set(got) == want
+        assert any(e[1] < -85.05 or e[3] > 85.05 for e in env)
+        assert any(e[0] < -180.0 or e[2] > 180.0 for e in env)
 
 
 def _jobs_and_plan(spark, build):

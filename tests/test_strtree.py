@@ -27,7 +27,9 @@ def _rand_boxes(rng, n, span=100.0, sz=5.0):
     return np.column_stack([lo, lo + wh])
 
 
-@pytest.mark.parametrize("n,m,cap", [(1, 7, 16), (37, 23, 4), (500, 200, 16)])
+@pytest.mark.parametrize(
+    "n,m,cap", [(1, 7, 16), (37, 23, 4), (500, 200, 16), (60, 9000, 8)]
+)
 def test_box_query_matches_brute_force(n, m, cap):
     rng = np.random.default_rng(n * 1000 + m)
     boxes = _rand_boxes(rng, n)
@@ -35,6 +37,10 @@ def test_box_query_matches_brute_force(n, m, cap):
     t = STRTree(boxes, cap=cap)
     qi, ti = t.query_boxes(qboxes)
     assert set(zip(qi.tolist(), ti.tolist())) == _brute(qboxes, boxes)
+    # pairs come grouped by query, in query order (the kNN and radius
+    # kernels build one list per query from consecutive pairs), also
+    # across the descent's query chunks
+    assert (np.diff(qi) >= 0).all()
 
 
 def test_point_query_and_edges():

@@ -1,7 +1,11 @@
 """pip_join_strtree / clip_join_strtree (operators/strtree_join.py)
 must be bit-identical to their cell-join twins on the same layers —
 two independent candidate generators (packed STR R-tree vs mercator
-cell cover) feeding the same exact refine kernels."""
+cell cover) feeding the same exact refine kernels.  knn_join and
+radius_join query the same kind of broadcast STR tree; they are checked
+against the shuffle twins and a numpy brute force."""
+
+import numpy as np
 
 from gdal_spark import corpus, zones
 from gdal_spark.operators.overlay import intersection_join
@@ -46,56 +50,65 @@ def test_clip_parity_on_rect_clip_layer(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
+def _knn_rows(df):
+    # d2 compared as raw float64 bits
+    return sorted(
+        (r["doc_id"], r["target_id"], r["rnk"], r["d2"].hex())
+        for r in df.select("doc_id", "target_id", "rnk", "d2").collect()
+    )
+
+
+def _brute_knn(docs, targets, k):
+    """Numpy brute-force top-k by (d2, target_id), d2 in the kernels'
+    and the DuckDB oracle's op order: the independent oracle."""
+    d = docs.select("doc_id", "lon", "lat").toPandas()
+    t = targets.select("target_id", "tlon", "tlat").toPandas()
+    tid = t["target_id"].to_numpy()
+    out = []
+    for did, x, y in d.itertuples(index=False):
+        dx = x - t["tlon"].to_numpy()
+        dy = y - t["tlat"].to_numpy()
+        d2 = dx * dx + dy * dy
+        for rnk, j in enumerate(np.lexsort((tid, d2))[:k], start=1):
+            out.append((int(did), int(tid[j]), rnk, float(d2[j]).hex()))
+    return sorted(out)
+
+
+def _check_knn(docs, targets, k):
+    from gdal_spark.operators.knn import knn_join, knn_join_shuffle
+
+    got = _knn_rows(knn_join(docs, targets, k=k))
+    assert got == _brute_knn(docs, targets, k)
+    assert got == _knn_rows(knn_join_shuffle(docs, targets, k=k))
+    return got
+
+
 def test_knn_parity(spark, sf_dir):
-    # tree radius-doubling vs cell-ring expansion: same metric, same
-    # tie rule, same d2 float ops — (doc, target, rnk, d2-bits) equal
-    from gdal_spark.operators.knn import knn_join, knn_targets
-    from gdal_spark.operators.strtree_join import knn_join_strtree
+    # the broadcast tree search against two independent oracles: the
+    # cell-ring shuffle join and a numpy brute force — (doc, target,
+    # rnk, d2-bits) equal
+    from gdal_spark.operators.knn import knn_targets
 
     docs = corpus.load_docs(spark, sf_dir).select("doc_id", "lon", "lat")
-    t = knn_targets(spark)
-    cols = ["doc_id", "target_id", "rnk", "d2"]
-
-    def rows(df):
-        return sorted(
-            (r["doc_id"], r["target_id"], r["rnk"], r["d2"].hex())
-            for r in df.select(cols).collect()
-        )
-
-    got = rows(knn_join_strtree(docs, t, k=5))
-    want = rows(knn_join(docs, t, k=5))
-    assert got == want and len(got) > 0
+    assert len(_check_knn(docs, knn_targets(spark), 5)) == 5 * docs.count()
 
 
-def test_knn_tree_tiny_radius_still_exact(spark, sf_dir):
-    # r0 far below target spacing forces many doubling rounds — the
-    # stop-rule proof, not the initial guess, must carry correctness
-    from gdal_spark.operators.knn import knn_join, knn_targets
-    from gdal_spark.operators.strtree_join import knn_join_strtree
+def test_knn_tree_tiny_radius_still_exact(spark, sf_dir, monkeypatch):
+    # a seed radius far below target spacing forces many doubling
+    # rounds — the stop-rule proof, not the initial guess, must carry
+    # correctness
+    from gdal_spark.operators import knn
 
+    monkeypatch.setattr(knn, "_KNN_R0", 0.01)
     docs = corpus.load_docs(spark, sf_dir).select("doc_id", "lon", "lat").limit(200)
-    t = knn_targets(spark)
-    got = sorted(
-        tuple(r)
-        for r in knn_join_strtree(docs, t, k=3, r0=0.01)
-        .select("doc_id", "target_id", "rnk")
-        .collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in knn_join(docs, t, k=3).select("doc_id", "target_id", "rnk").collect()
-    )
-    assert got == want and len(got) > 0
+    assert len(_check_knn(docs, knn.knn_targets(spark), 3)) == 200 * 3
 
 
 def test_knn_parity_clustered_targets(spark, sf_dir):
-    # the tree twin's documented advantage is nonuniform target density
-    # (no cell-size knob) — pin bit-parity on a pathological layout:
-    # 99% of targets inside one 0.5-degree blob, a handful of outliers
+    # nonuniform target density (the tree has no cell-size knob) — a
+    # pathological layout: 99% of targets inside one 0.5-degree blob,
+    # a handful of outliers
     from pyspark.sql import functions as F
-
-    from gdal_spark.operators.knn import knn_join
-    from gdal_spark.operators.strtree_join import knn_join_strtree
 
     t = spark.range(500).select(
         F.col("id").alias("target_id"),
@@ -107,17 +120,69 @@ def test_knn_parity_clustered_targets(spark, sf_dir):
         .alias("tlat"),
     )
     docs = corpus.load_docs(spark, sf_dir).select("doc_id", "lon", "lat").limit(400)
-    cols = ["doc_id", "target_id", "rnk", "d2"]
+    assert len(_check_knn(docs, t, 7)) == 400 * 7
 
-    def rows(df):
-        return sorted(
-            (r["doc_id"], r["target_id"], r["rnk"], r["d2"].hex())
-            for r in df.select(cols).collect()
-        )
 
-    got = rows(knn_join_strtree(docs, t, k=7))
-    want = rows(knn_join(docs, t, k=7))
-    assert got == want and len(got) == 400 * 7
+def test_radius_on_the_circle_strict_vs_inclusive(spark):
+    # targets exactly on the circle r² = 25 (dx,dy = 3,4 and 5,0: d2 is
+    # exactly 25.0) are kept by the inclusive test only, on every side
+    # of the padded candidate box; those just outside are kept by none
+    from gdal_spark.operators.knn import radius_join
+
+    docs = spark.createDataFrame(
+        [(1, 0.0, 0.0), (2, 100.5, -40.25)], "doc_id long, lon double, lat double"
+    )
+    offsets = [(3.0, 4.0), (5.0, 0.0), (-3.0, -4.0), (0.0, -5.0),
+               (1.0, 2.0), (5.0, 1e-6), (0.0, 5.000001)]
+    rows, tid = [], 0
+    for _, x, y in docs.collect():
+        for dx, dy in offsets:
+            rows.append((tid, x + dx, y + dy))
+            tid += 1
+    t = spark.createDataFrame(rows, "target_id long, tlon double, tlat double")
+
+    def pairs(inclusive):
+        j = radius_join(docs, t, radius2_sql=25.0, inclusive=inclusive)
+        return sorted((r.doc_id, r.target_id, r.d2) for r in j.collect())
+
+    assert pairs(False) == [(1, 4, 5.0), (2, 11, 5.0)]
+    assert pairs(True) == [
+        (1, 0, 25.0), (1, 1, 25.0), (1, 2, 25.0), (1, 3, 25.0), (1, 4, 5.0),
+        (2, 7, 25.0), (2, 8, 25.0), (2, 9, 25.0), (2, 10, 25.0), (2, 11, 5.0),
+    ]
+
+
+def test_knn_skips_coordinates_that_are_not_finite(spark):
+    # a NULL or NaN target is nobody's neighbour and a NaN doc has none;
+    # with fewer finite targets than k each finite doc gets them all
+    from gdal_spark.operators.knn import knn_join, radius_join
+
+    t = spark.createDataFrame(
+        [(0, 1.0, 1.0), (1, None, 0.0), (2, float("nan"), 0.0), (3, -2.0, 0.5)],
+        "target_id long, tlon double, tlat double",
+    )
+    docs = spark.createDataFrame(
+        [(10, 0.0, 0.0), (11, float("nan"), 0.0)], "doc_id long, lon double, lat double"
+    )
+    got = sorted((r.doc_id, r.target_id, r.rnk) for r in knn_join(docs, t, k=5).collect())
+    assert got == [(10, 0, 1), (10, 3, 2)]
+    near = radius_join(docs, t, radius2_sql=1.0e6, inclusive=True).collect()
+    assert sorted((r.doc_id, r.target_id) for r in near) == [(10, 0), (10, 3)]
+
+
+def test_knn_passes_spans_through(spark, sf_dir):
+    # the doc columns never cross into Python: spans (and every other
+    # doc column) come back equal to the input joined on doc_id
+    from pyspark.sql import functions as F
+
+    from gdal_spark.operators.knn import knn_join, knn_targets
+
+    docs = corpus.load_docs(spark, sf_dir)
+    out = knn_join(docs, knn_targets(spark), k=3)
+    assert out.columns == docs.columns + ["target_id", "rnk", "d2"]
+    j = out.join(docs.select("doc_id", F.col("spans").alias("_in")), "doc_id")
+    assert j.count() == 3 * docs.count()
+    assert j.filter(~F.col("spans").eqNullSafe(F.col("_in"))).count() == 0
 
 
 def test_clip_parity_on_rich_concave_layer(spark, sf_dir):
@@ -139,8 +204,7 @@ def test_dim_contract_guard_fires(spark, sf_dir, monkeypatch):
     import pytest
 
     from gdal_spark.operators import dim
-    from gdal_spark.operators.knn import knn_targets
-    from gdal_spark.operators.strtree_join import knn_join_strtree
+    from gdal_spark.operators.knn import knn_join, knn_targets, radius_join
 
     docs = corpus.load_docs(spark, sf_dir)
     z = zones.rect_zones(spark).drop("zxmin", "zymin", "zxmax", "zymax")
@@ -155,7 +219,9 @@ def test_dim_contract_guard_fires(spark, sf_dir, monkeypatch):
                     "zxmin", "zymin", "zxmax", "zymax"
                 ),
             )
-        with pytest.raises(ValueError, match="cell-ring"):
-            knn_join_strtree(docs.select("doc_id", "lon", "lat"), knn_targets(spark))
+        with pytest.raises(ValueError, match="knn_join_shuffle"):
+            knn_join(docs.select("doc_id", "lon", "lat"), knn_targets(spark))
+        with pytest.raises(ValueError, match="radius_join_shuffle"):
+            radius_join(docs, knn_targets(spark), radius2_sql=25.0)
     # under the threshold the join still runs
     assert pip_join_strtree(docs, z).count() > 0
