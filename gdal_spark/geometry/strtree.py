@@ -92,11 +92,10 @@ class STRTree:
             z = np.empty(0, dtype=np.int64)
             return z, z
         if m > _QUERY_CHUNK:
-            parts = [self.query_boxes(qboxes[s : s + _QUERY_CHUNK])
+            parts = [(s, *self.query_boxes(qboxes[s : s + _QUERY_CHUNK]))
                      for s in range(0, m, _QUERY_CHUNK)]
-            offs = range(0, m, _QUERY_CHUNK)
-            return (np.concatenate([qi + o for (qi, _), o in zip(parts, offs)]),
-                    np.concatenate([ti for _, ti in parts]))
+            return (np.concatenate([qi + s for s, qi, _ in parts]),
+                    np.concatenate([ti for _, _, ti in parts]))
         top = self.levels[-1]
         qi = np.repeat(np.arange(m, dtype=np.int64), top.shape[0])
         ni = np.tile(np.arange(top.shape[0], dtype=np.int64), m)
