@@ -84,6 +84,16 @@ class TestMapSideKernelsNeverShuffle:
             assert "MapInPandas" not in plan, plan
             assert "BatchEvalPython" not in plan, plan
 
+    def test_knn_strtree_zero_shuffle_zero_join(self, spark, sf_dir):
+        # the registry's STR-tree kNN row: the broadcast target STR tree
+        # answers map-side, no shuffle and no join
+        from gdal_spark.registry import QUERIES
+
+        plan = _plan(QUERIES["knn_strtree"](spark, sf_dir))
+        assert _shuffles(plan) == 0, plan
+        assert "Join" not in plan, plan
+        assert plan.count("ArrowEvalPython") == 1, plan
+
     def test_strtree_zero_shuffle_zero_join(self, spark, docs):
         from gdal_spark.operators.strtree_join import pip_join_strtree
 
